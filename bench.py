@@ -61,6 +61,18 @@ def _host_load_stamp() -> dict:
     return stamp
 
 
+def _spin_sec() -> float:
+    """BASELINE.md's host-noise probe: a single-core pure-Python spin
+    (1.29 s on an idle host when it was recorded). A run whose spin is
+    slower than the host's idle figure ran on a contended CPU, whatever
+    the guest's loadavg says."""
+    t0 = time.perf_counter()
+    s = 0
+    for i in range(10_000_000):
+        s += i
+    return round(time.perf_counter() - t0, 4)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -94,7 +106,10 @@ def main() -> None:
     # diagnosed after the fact from the loadavg stamp. Make it a
     # first-class field the moment it happens.
     warning = None
-    n_cpus = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
+    # the run queue counts the host's cores, not the session's: on an
+    # idle 4-core box the 1-min loadavg sits near 1.5 from background
+    # work alone, which a cpus/4 threshold flagged as loaded
+    box_cpus = os.cpu_count() or 8
     if load_start.get("loadavg"):
         la = load_start["loadavg"]
         # BOTH averages gate the tripwire (ADVICE r14): the misleading
@@ -107,11 +122,11 @@ def main() -> None:
         loaded = [
             f"{label} loadavg {v}"
             for label, v in (("1-min", la[0]), ("15-min", la[2] if len(la) > 2 else None))
-            if isinstance(v, (int, float)) and v > n_cpus / 4
+            if isinstance(v, (int, float)) and v > box_cpus / 2
         ]
         if loaded:
             warning = (
-                f"box loaded at start ({', '.join(loaded)} > {n_cpus}/4): "
+                f"box loaded at start ({', '.join(loaded)} > {box_cpus}/2): "
                 "timings are NOT a settled envelope — compare against "
                 "BASELINE.md idle per-row records, not directly"
             )
@@ -131,6 +146,7 @@ def main() -> None:
         spark.range(1).write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
+    spin_sec = _spin_sec()
     _floor_run()  # warm-up, same discipline as the query rows
     floor_sec = round(min(_floor_run(), _floor_run()), 4)
 
@@ -156,6 +172,7 @@ def main() -> None:
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "errors": sum(1 for t in timings.values() if isinstance(t, dict)),
                 "floor_sec": floor_sec,
+                "spin_sec": spin_sec,
                 "load_start": load_start,
                 "load_end": _host_load_stamp(),
                 **({"warning": warning} if warning else {}),

@@ -1941,6 +1941,17 @@ def curated_corpus_splits(spark, sf_dir):
 # --- bench-scale variants (rows-only: the ground-truth oracle is
 # all-pairs-quadratic, which is exactly what these paths avoid) -------------
 
+def _spread_replicas(df, *cols):
+    """Hash-spread a replicated corpus over the session's default
+    parallelism. The replicas' explode inherits the (single-file) input
+    partitioning, so without a spread the hash-heavy stages after it run
+    on one core; a fixed count tuned for a large box instead pays one
+    task's overhead per partition on a small one (64 partitions over
+    1.5k docs on 4 cores). The same rule as
+    ``operators.text_dedup._fanout_partitions``."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)
+
+
 def _scaled_docs(spark, sf_dir, copies: int):
     """documents replicated ``copies``× with per-copy id offsets and a
     distinct suffix word — every copy is a near-dup of its original, so
@@ -1957,9 +1968,7 @@ def _scaled_docs(spark, sf_dir, copies: int):
     rep = d.select(
         F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("__i"), "doc_id", "text"
     )
-    # explode inherits the (single-file) input partitioning — spread the
-    # fan-out before the hash-heavy stages or they run on one core
-    return rep.repartition(64, "doc_id", "__i").select(
+    return _spread_replicas(rep, "doc_id", "__i").select(
         (F.col("doc_id") + F.col("__i") * 1000000).alias("doc_id"),
         F.when(F.col("__i") == 0, F.col("text"))
         .otherwise(F.concat("text", F.lit(" v"), F.col("__i").cast("string")))
@@ -2171,13 +2180,12 @@ def cosine_topk_scaled(spark, sf_dir):
     on both sides and replica ties (bit-identical vectors) break on
     vec_id, so the top-k set is engine-deterministic."""
     e = _t(spark, sf_dir, "embeddings")
-    rep = (
+    rep = _spread_replicas(
         e.select(
             F.explode(F.sequence(F.lit(0), F.lit(19))).alias("__i"), "vec_id", "embedding"
-        )
-        .repartition(64, "vec_id", "__i")
-        .select((F.col("vec_id") + F.col("__i") * 1000000).alias("vec_id"), "embedding")
-    )
+        ),
+        "vec_id", "__i",
+    ).select((F.col("vec_id") + F.col("__i") * 1000000).alias("vec_id"), "embedding")
     queries = rep.filter(F.col("vec_id") < 20)
     return cosine_topk(rep.filter(F.col("vec_id") >= 20), queries, k=10)
 
@@ -2622,9 +2630,12 @@ def embedding_near_pairs_lsh_scaled(spark, sf_dir):
     # pre-explode frame, never the 20× fan-out)
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding").distinct()
     v = vec_double("embedding")
-    rep = e.select(
-        F.explode(F.sequence(F.lit(0), F.lit(19))).alias("__i"), "vec_id", "embedding"
-    ).repartition(64, "vec_id", "__i")
+    rep = _spread_replicas(
+        e.select(
+            F.explode(F.sequence(F.lit(0), F.lit(19))).alias("__i"), "vec_id", "embedding"
+        ),
+        "vec_id", "__i",
+    )
     corpus = rep.select(
         (F.col("vec_id") + F.col("__i") * 1000000).alias("vec_id"),
         F.transform(

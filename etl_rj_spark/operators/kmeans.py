@@ -275,20 +275,21 @@ def kmeans_ivf_topk(
     ``operators/similarity.py``). The rescoring vectors ride THROUGH
     the assignment (``carry``) — no join-back by id, so duplicated ids
     neither fan out nor cost a corpus shuffle (r11)."""
-    from etl_rj_spark.operators.similarity import cosine, vec_double
+    from etl_rj_spark.operators.similarity import pair_cosine, vec_norm_carry
 
-    c = kmeans_assign(
-        corpus, centroids, vec_col, id_col, carry={"__cv": vec_double(vec_col)}
-    )
+    c = kmeans_assign(corpus, centroids, vec_col, id_col, carry=vec_norm_carry(vec_col))
     q = F.broadcast(
         kmeans_assign(
-            queries, centroids, vec_col, id_col, carry={"__qv": vec_double(vec_col)}
-        ).select(F.col(id_col).alias(query_id_col), "cell", "__qv")
+            queries, centroids, vec_col, id_col, carry=vec_norm_carry(vec_col)
+        ).select(
+            F.col(id_col).alias(query_id_col), "cell",
+            F.col("__v").alias("__qv"), F.col("__v_norm").alias("__qv_norm"),
+        )
     )
     scored = q.join(c, "cell").select(
         query_id_col,
         id_col,
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("score"),
+        F.round(pair_cosine("__qv", "__v"), 9).alias("score"),
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -444,7 +445,7 @@ def probe_ivf_index(
     prunes to probed cells; zero Exchange on the index side), exact
     cosine rescoring inside the cell under the shared 9-dp/id-tiebreak
     contract."""
-    from etl_rj_spark.operators.similarity import cosine, vec_double
+    from etl_rj_spark.operators.similarity import pair_cosine, vec_double, with_norm
 
     meta = spark.table(f"{table_prefix}_meta").first()
     if meta.family != IVF_FAMILY:
@@ -477,18 +478,25 @@ def probe_ivf_index(
             )
         ),
     )
+    # the query norm is attached BEFORE the centroid crossJoin and the
+    # index norm before the cell join: norms are per vector, never per
+    # pair (see operators/similarity.py)
+    qv = with_norm(queries.withColumn("__qv", vec_double(vec_col)), "__qv")
     q = F.broadcast(
-        queries.crossJoin(packed).select(
-            F.col(id_col).alias(query_id_col),
-            vec_double(vec_col).alias("__qv"),
-            best["cid"].alias("cell"),
+        qv.crossJoin(packed).select(
+            F.col(id_col).alias(query_id_col), "__qv", "__qv_norm", best["cid"].alias("cell"),
         )
     )
-    idx = spark.table(f"{table_prefix}_cells")
+    idx = with_norm(
+        spark.table(f"{table_prefix}_cells").select(
+            id_col, "cell", vec_double(vec_col).alias("__cv")
+        ),
+        "__cv",
+    )
     scored = q.join(idx, "cell").select(
         query_id_col,
         id_col,
-        F.round(cosine(F.col("__qv"), vec_double(vec_col)), 9).alias("score"),
+        F.round(pair_cosine("__qv", "__cv"), 9).alias("score"),
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -524,21 +532,21 @@ def hard_negative_mining(
     Returns (query_id, anchor label, vec_id, negative label, score,
     rank 1..k).
     """
-    from etl_rj_spark.operators.similarity import cosine, vec_double
+    from etl_rj_spark.operators.similarity import pair_cosine, vec_double, with_norm
 
     c_cells = kmeans_assign(corpus, centroids, vec_col, id_col)
     q_cells = kmeans_assign(queries, centroids, vec_col, id_col)
-    c = corpus.select(
+    c = with_norm(corpus.select(
         F.col(id_col),
         F.col(label_col).alias("neg_label"),
         vec_double(vec_col).alias("__cv"),
-    ).join(c_cells, id_col)
+    ), "__cv").join(c_cells, id_col)
     q = F.broadcast(
-        queries.select(
+        with_norm(queries.select(
             F.col(id_col).alias(query_id_col),
             F.col(label_col).alias("anchor_label"),
             vec_double(vec_col).alias("__qv"),
-        ).join(q_cells.select(F.col(id_col).alias(query_id_col), "cell"), query_id_col)
+        ), "__qv").join(q_cells.select(F.col(id_col).alias(query_id_col), "cell"), query_id_col)
     )
     scored = (
         q.join(c, "cell")
@@ -548,7 +556,7 @@ def hard_negative_mining(
             "anchor_label",
             id_col,
             "neg_label",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("score"),
+            F.round(pair_cosine("__qv", "__cv"), 9).alias("score"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)

@@ -11,6 +11,15 @@
 
 Dot products evaluate in a fixed left-to-right order over
 double-cast elements, so scores are bit-reproducible across engines.
+
+Norms belong to single vectors, not to pairs: every operator that
+scores a pair product attaches each side's ``l2_norm`` as a column
+before the join (:func:`with_norm`) and scores with
+:func:`pair_cosine`, which reads them, so a pair costs one interpreted dot
+(``zip_with``/``aggregate``) instead of three. :func:`cosine` is the
+same formula with the norms computed in place, for row-local callers.
+Both paths give bit-identical scores: each norm is the same
+``sqrt(dot(v, v))`` wherever it is evaluated.
 """
 
 from __future__ import annotations
@@ -39,13 +48,41 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL when either vector has zero norm (a
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine similarity from precomputed L2 norms ``na``/``nb`` of
+    ``a``/``b``; NULL when either vector has zero norm (a
     failed-encoder all-zero row must not DIVIDE_BY_ZERO-abort the
     whole job under Spark 4's ANSI default — NULL similarity ranks
     last / drops from thresholds, which is the right semantics for a
-    vector with no direction)."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+    vector with no direction) and when either vector is NULL."""
+    return F.try_divide(dot(a, b), na * nb)
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Row-local cosine: :func:`cosine_from_norms` with both norms
+    computed in place. Over a pair product use :func:`with_norm` and
+    :func:`pair_cosine` instead, so each norm is computed once per
+    vector rather than once per pair."""
+    return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
+
+
+def with_norm(df: DataFrame, vec: str) -> DataFrame:
+    """Attach ``{vec}_norm`` = ``l2_norm(vec)`` — one side of a pair
+    product, before the join."""
+    return df.withColumn(f"{vec}_norm", l2_norm(F.col(vec)))
+
+
+def pair_cosine(a: str, b: str) -> Column:
+    """Cosine of the vector columns ``a`` and ``b`` of a joined pair
+    frame, whose norms :func:`with_norm` attached on each side."""
+    return cosine_from_norms(F.col(a), F.col(b), F.col(f"{a}_norm"), F.col(f"{b}_norm"))
+
+
+def vec_norm_carry(vec_col: str) -> dict[str, Column]:
+    """``kmeans_assign`` carry of the double vector ``__v`` and its
+    norm ``__v_norm``, so both ride through the cell assignment."""
+    v = vec_double(vec_col)
+    return {"__v": v, "__v_norm": l2_norm(v)}
 
 
 def l2_normalize(a: Column, round_digits: int | None = None) -> Column:
@@ -139,12 +176,13 @@ def cosine_topk(
     Output: (query_id, id, score, rank) with deterministic tie-break
     on id. Score rounded to 9 dp for cross-engine stability.
     """
-    q = F.broadcast(
-        queries.select(F.col(id_col).alias(query_id_col), vec_double(vec_col).alias("__qv"))
-    )
-    c = corpus.select(F.col(id_col), vec_double(vec_col).alias("__cv"))
+    q = F.broadcast(with_norm(
+        queries.select(F.col(id_col).alias(query_id_col), vec_double(vec_col).alias("__qv")),
+        "__qv",
+    ))
+    c = with_norm(corpus.select(F.col(id_col), vec_double(vec_col).alias("__cv")), "__cv")
     scored = q.crossJoin(c).select(
-        query_id_col, id_col, F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("score")
+        query_id_col, id_col, F.round(pair_cosine("__qv", "__cv"), 9).alias("score")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -172,18 +210,22 @@ def ivf_topk(
     """Approximate top-k: probe only the query's own sign-bit cell.
     The cell equi-join replaces the cross join — at scale the corpus is
     pre-bucketed by cell and each query reads one bucket."""
-    q = F.broadcast(
+    q = F.broadcast(with_norm(
         queries.select(
             F.col(id_col).alias(query_id_col),
             vec_double(vec_col).alias("__qv"),
             ivf_cell(vec_col, bits).alias("__cell"),
-        )
-    )
-    c = corpus.select(
-        F.col(id_col), vec_double(vec_col).alias("__cv"), ivf_cell(vec_col, bits).alias("__cell")
+        ),
+        "__qv",
+    ))
+    c = with_norm(
+        corpus.select(
+            F.col(id_col), vec_double(vec_col).alias("__cv"), ivf_cell(vec_col, bits).alias("__cell")
+        ),
+        "__cv",
     )
     scored = q.join(c, "__cell").select(
-        query_id_col, id_col, F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("score")
+        query_id_col, id_col, F.round(pair_cosine("__qv", "__cv"), 9).alias("score")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -275,26 +317,29 @@ def lsh_topk(
     rescoring. At scale the corpus bucket table is computed once and
     bucketed/bucket-joined; each query probes ``tables`` buckets of
     ~N/2^bits vectors instead of scanning N."""
-    qb = queries.select(
+    qb = with_norm(queries.select(
         F.col(id_col).alias(query_id_col),
         vec_double(vec_col).alias("__qv"),
         F.explode(lsh_buckets(vec_col, dim, bits, tables)).alias("tb"),
-    ).select(query_id_col, "__qv", "tb.table", "tb.bucket")
+    ), "__qv").select(query_id_col, "__qv", "__qv_norm", "tb.table", "tb.bucket")
     cb = corpus.select(
         F.col(id_col),
         F.explode(lsh_buckets(vec_col, dim, bits, tables)).alias("tb"),
     ).select(id_col, "tb.table", "tb.bucket")
     cand = (
-        F.broadcast(qb).join(cb, ["table", "bucket"]).select(query_id_col, "__qv", id_col).distinct()
+        F.broadcast(qb)
+        .join(cb, ["table", "bucket"])
+        .select(query_id_col, "__qv", "__qv_norm", id_col)
+        .distinct()
     )
-    c = corpus.select(F.col(id_col), vec_double(vec_col).alias("__cv"))
+    c = with_norm(corpus.select(F.col(id_col), vec_double(vec_col).alias("__cv")), "__cv")
     # .distinct() on the CANDIDATE-sized scored frame: ranks are over
     # DISTINCT (query, id, score) results — a corpus row duplicated by
     # a re-ingested shard must not occupy several of the k slots (r11
     # dupstorm-regime contract; value-level no-op on unique ids, and
     # never a corpus-sized dedup)
     scored = cand.join(c, id_col).select(
-        query_id_col, id_col, F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("score")
+        query_id_col, id_col, F.round(pair_cosine("__qv", "__cv"), 9).alias("score")
     ).distinct()
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -313,13 +358,12 @@ def cosine_near_pairs(
     """All-pairs embedding near-dup detection: (id_a < id_b, score) for
     every pair at cosine ≥ threshold. Quadratic — the correctness
     baseline; use ``cosine_near_pairs_lsh`` at corpus scale."""
-    a = corpus.select(F.col(id_col).alias("id_a"), vec_double(vec_col).alias("__va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), vec_double(vec_col).alias("__vb"))
+    vecs = with_norm(corpus.select(F.col(id_col), vec_double(vec_col).alias("__v")), "__v")
+    a = vecs.toDF("id_a", "__va", "__va_norm")
+    b = vecs.toDF("id_b", "__vb", "__vb_norm")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.round(cosine(F.col("__va"), F.col("__vb")), 9).alias("score")
-        )
+        .select("id_a", "id_b", F.round(pair_cosine("__va", "__vb"), 9).alias("score"))
         .filter(F.col("score") >= threshold)
     )
 
@@ -350,15 +394,13 @@ def cosine_near_pairs_lsh(
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = corpus.select(F.col(id_col), vec_double(vec_col).alias("__v"))
-    va = vecs.toDF("id_a", "__va")
-    vb = vecs.toDF("id_b", "__vb")
+    vecs = with_norm(corpus.select(F.col(id_col), vec_double(vec_col).alias("__v")), "__v")
+    va = vecs.toDF("id_a", "__va", "__va_norm")
+    vb = vecs.toDF("id_b", "__vb", "__vb_norm")
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", F.round(cosine(F.col("__va"), F.col("__vb")), 9).alias("score")
-        )
+        .select("id_a", "id_b", F.round(pair_cosine("__va", "__vb"), 9).alias("score"))
         .filter(F.col("score") >= threshold)
     )
 
@@ -453,16 +495,19 @@ def semdedup_incremental(
     # id: duplicated batch ids would fan out multiplicity² — r11
     # dupstorm fix — and the join cost a batch-sized shuffle)
     vnew = kmeans_assign(
-        batch, centroids, vec_col=vec_col, id_col=id_col,
-        carry={"__v": vec_double(vec_col)},
+        batch, centroids, vec_col=vec_col, id_col=id_col, carry=vec_norm_carry(vec_col),
     ).localCheckpoint()
-    a = vnew.select(F.col(id_col).alias("id_a"), "cell", F.col("__v").alias("__va"))
-    old_side = existing.select(
+    a = vnew.select(
+        F.col(id_col).alias("id_a"), "cell",
+        F.col("__v").alias("__va"), F.col("__v_norm").alias("__va_norm"),
+    )
+    old_side = with_norm(existing.select(
         F.lit(None).cast("long").alias("id_b"), F.col("cell"),
         vec_double(vec_col).alias("__vb"),
-    )
+    ), "__vb")
     new_side = vnew.select(
-        F.col(id_col).alias("id_b"), "cell", F.col("__v").alias("__vb")
+        F.col(id_col).alias("id_b"), "cell",
+        F.col("__v").alias("__vb"), F.col("__v_norm").alias("__vb_norm"),
     )
     # null id_b marks an existing survivor: ALWAYS a valid blocker;
     # a batch-mate blocks only if strictly earlier
@@ -470,7 +515,7 @@ def semdedup_incremental(
         F.col("id_b").isNull() | (F.col("id_b") < F.col("id_a"))
     )
     dropped = (
-        cand.filter(F.round(cosine(F.col("__va"), F.col("__vb")), 9) >= threshold)
+        cand.filter(F.round(pair_cosine("__va", "__vb"), 9) >= threshold)
         .select(F.col("id_a").alias(id_col))
         .distinct()
     )
@@ -518,15 +563,20 @@ def semdedup(
     # cell and survive or die together (same-id rows never block each
     # other — exact dedup is an upstream concern, not SemDeDup's).
     v = kmeans_assign(
-        corpus, centroids, vec_col=vec_col, id_col=id_col,
-        carry={"__v": vec_double(vec_col)},
+        corpus, centroids, vec_col=vec_col, id_col=id_col, carry=vec_norm_carry(vec_col),
     ).localCheckpoint()
-    a = v.select(F.col(id_col).alias("id_a"), "cell", F.col("__v").alias("__va"))
-    b = v.select(F.col(id_col).alias("id_b"), "cell", F.col("__v").alias("__vb"))
+    a = v.select(
+        F.col(id_col).alias("id_a"), "cell",
+        F.col("__v").alias("__va"), F.col("__v_norm").alias("__va_norm"),
+    )
+    b = v.select(
+        F.col(id_col).alias("id_b"), "cell",
+        F.col("__v").alias("__vb"), F.col("__v_norm").alias("__vb_norm"),
+    )
     dropped = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(cosine(F.col("__va"), F.col("__vb")), 9) >= threshold)
+        .filter(F.round(pair_cosine("__va", "__vb"), 9) >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
@@ -561,13 +611,13 @@ def lsh_topk_multiprobe(
     oracle replays it bit-for-bit."""
     probe_masks = [0] + [1 << i for i in range(bits)]
     qb = (
-        queries.select(
+        with_norm(queries.select(
             F.col(id_col).alias(query_id_col),
             vec_double(vec_col).alias("__qv"),
             F.explode(lsh_buckets(vec_col, dim, bits, tables)).alias("tb"),
-        )
+        ), "__qv")
         .select(
-            query_id_col, "__qv", "tb.table",
+            query_id_col, "__qv", "__qv_norm", "tb.table",
             F.explode(
                 F.array(*[F.col("tb.bucket").bitwiseXOR(F.lit(m)) for m in probe_masks])
             ).alias("bucket"),
@@ -580,17 +630,17 @@ def lsh_topk_multiprobe(
     cand = (
         F.broadcast(qb)
         .join(cb, ["table", "bucket"])
-        .select(query_id_col, "__qv", id_col)
+        .select(query_id_col, "__qv", "__qv_norm", id_col)
         .distinct()
     )
-    c = corpus.select(F.col(id_col), vec_double(vec_col).alias("__cv"))
+    c = with_norm(corpus.select(F.col(id_col), vec_double(vec_col).alias("__cv")), "__cv")
     # .distinct() on the CANDIDATE-sized scored frame: ranks are over
     # DISTINCT (query, id, score) results — a corpus row duplicated by
     # a re-ingested shard must not occupy several of the k slots (r11
     # dupstorm-regime contract; value-level no-op on unique ids, and
     # never a corpus-sized dedup)
     scored = cand.join(c, id_col).select(
-        query_id_col, id_col, F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("score")
+        query_id_col, id_col, F.round(pair_cosine("__qv", "__cv"), 9).alias("score")
     ).distinct()
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -755,18 +805,22 @@ def knn_label_vote(
     shortlists for the index-backed variant when the query side stops
     fitting a broadcast.
     """
-    q = F.broadcast(
+    q = F.broadcast(with_norm(
         queries.select(
             F.col(id_col).alias(query_id_col), vec_double(vec_col).alias("__qv")
-        )
+        ),
+        "__qv",
+    ))
+    c = with_norm(
+        corpus.select(F.col(id_col), F.col(label_col), vec_double(vec_col).alias("__cv")),
+        "__cv",
     )
-    c = corpus.select(F.col(id_col), F.col(label_col), vec_double(vec_col).alias("__cv"))
     scored = (
         q.crossJoin(c)
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col, id_col, label_col,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("__score"),
+            F.round(pair_cosine("__qv", "__cv"), 9).alias("__score"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("__score"), id_col)
@@ -823,13 +877,15 @@ def margin_bitext_mine(
     past broadcast size, generate candidates with the ANN shortlists
     and feed them through the same margin/mutuality windows.
     """
-    s_pool = F.broadcast(
-        src.select(F.col(id_col).alias("src_id"), vec_double(vec_col).alias("__sv"))
+    s_pool = F.broadcast(with_norm(
+        src.select(F.col(id_col).alias("src_id"), vec_double(vec_col).alias("__sv")), "__sv"
+    ))
+    t_pool = with_norm(
+        tgt.select(F.col(id_col).alias("tgt_id"), vec_double(vec_col).alias("__tv")), "__tv"
     )
-    t_pool = tgt.select(F.col(id_col).alias("tgt_id"), vec_double(vec_col).alias("__tv"))
     scored = s_pool.crossJoin(t_pool).select(
         "src_id", "tgt_id",
-        F.round(cosine(F.col("__sv"), F.col("__tv")) * 1e9).cast("long").alias("score_nano"),
+        F.round(pair_cosine("__sv", "__tv") * 1e9).cast("long").alias("score_nano"),
     )
     w_s = Window.partitionBy("src_id").orderBy(F.desc("score_nano"), "tgt_id")
     w_t = Window.partitionBy("tgt_id").orderBy(F.desc("score_nano"), "src_id")

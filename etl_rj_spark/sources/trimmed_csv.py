@@ -42,7 +42,8 @@ def read_csv_trimmed(
     and ``skipfooter`` trailing junk lines per file; the first kept
     line is the header. All columns are strings (the reference relies
     on post-read lenient casts; header names keep trailing spaces)."""
-    raw = spark.read.text(path).select(
+    text = spark.read.text(path)
+    raw = text.select(
         "value",
         F.col("_metadata.file_path").alias("_file"),
         F.monotonically_increasing_id().alias("_mid"),
@@ -59,16 +60,20 @@ def read_csv_trimmed(
     # data). Fail loudly on per-file header drift — parsing a drifted
     # file against an arbitrary sibling's header would silently
     # misalign its columns (the xls_datasource applies the same rule)
-    hdr_rows = lines.filter(F.col("_idx") == skiprows).select("value", "_file").collect()
+    hdr_rows = [
+        (line, f)
+        for f in text.inputFiles()
+        if (line := _line_at(spark, f, skiprows)) is not None
+    ]
     if not hdr_rows:
         raise ValueError(f"{path}: no header line at index {skiprows}")
-    if len({r.value for r in hdr_rows}) > 1:
-        drifted = sorted({r._file for r in hdr_rows})
+    if len({line for line, _ in hdr_rows}) > 1:
+        drifted = sorted({f for _, f in hdr_rows})
         raise ValueError(
             f"{path}: header drift across {len(drifted)} files at line "
             f"{skiprows} — every file must share one header"
         )
-    header = next(_csv.reader(io.StringIO(hdr_rows[0].value), delimiter=sep))
+    header = next(_csv.reader(io.StringIO(hdr_rows[0][0]), delimiter=sep))
     # DDL string (from_csv takes no StructType); backticks preserve the
     # trailing spaces the reference's rename maps key on
     schema = ", ".join(f"`{c.replace('`', '``')}` STRING" for c in header)
@@ -80,3 +85,29 @@ def read_csv_trimmed(
         F.from_csv("value", schema, {"sep": sep}).alias("r"),
         (F.col("_idx") - skiprows - 1).alias("_row_idx"),
     ).select("r.*", "_row_idx")
+
+
+def _line_at(spark: SparkSession, file_uri: str, idx: int) -> str | None:
+    """Line ``idx`` (0-based) of one file, read on the driver through
+    the Hadoop FS API: only the first ``idx + 1`` lines are read, no
+    Spark job starts. ``BufferedReader.readLine`` ends a line at
+    ``\\n``, ``\\r`` or ``\\r\\n``, the terminators of Spark's text
+    source; compressed files decode through the same codec lookup.
+    None when the file has no such line."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    # ``inputFiles`` gives escaped URIs ("a%20b.csv"): parse them as a
+    # URI, never as a path string, or the escape is taken literally
+    p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(file_uri))
+    stream = p.getFileSystem(conf).open(p)
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(p)
+    if codec is not None:
+        stream = codec.createInputStream(stream)
+    reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
+    try:
+        for _ in range(idx):
+            if reader.readLine() is None:
+                return None
+        return reader.readLine()
+    finally:
+        reader.close()
