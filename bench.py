@@ -82,10 +82,10 @@ def main() -> None:
     bench_queries = {n: q for n, q in REGISTRY.items() if q.bench}
 
     def run(name: str) -> float:
-        # drop persisted intermediates leaked by prior builds: the cache
-        # manager matches on logical plan, so a timed run would silently
-        # reuse its own warm-up's persist()ed stages (under-measuring),
-        # and accumulated caches pressure the executor heap
+        # start from an empty cache manager: it matches on logical plan,
+        # so a stage some earlier build persist()ed and kept would be
+        # silently reused by the timed run (under-measuring) and would
+        # pressure the executor heap
         spark.catalog.clearCache()
         q = bench_queries[name]
         # bench_build (when set) is the production operator alone;

@@ -88,7 +88,7 @@ def _scratch(name: str) -> str:
 
     The pid suffix is load-bearing (VERDICT r13 §wrong #1): with a
     fixed ``/tmp/etl_rj_cov_<name>`` two concurrent registry runs —
-    e.g. ``window_audit.py`` alongside a live pytest — are mutually
+    e.g. a plan audit alongside a live pytest — are mutually
     destructive: one process's rmtree-on-entry deleted the other's
     LIVE streaming checkpoint (reproduced:
     ``FileNotFoundException: .../etl_rj_cov_stream_dedup_wm/ck/state/0/132``).

@@ -2014,7 +2014,7 @@ def _within_base_expected(values_by_base, pair_pred):
     return (
         values_by_base.groupBy("__base")
         # sorted: the C(n,2) pair-flag SUM below is order-free already,
-        # but the canonical order lets order_audit.py verify that
+        # but the canonical order lets the order audit verify that
         # structurally (r15; ~25 small arrays per base — free)
         .agg(F.array_sort(F.collect_list("__val")).alias("ms"))
         .select(
@@ -2108,18 +2108,20 @@ def minhash_lsh_pairs_scaled(spark, sf_dir):
     from etl_rj_spark.operators.text_dedup import shingle_hashes
 
     corpus = _scaled_docs(spark, sf_dir, 25)
-    # one persisted hash pass feeds BOTH the LSH dedup and the exact
-    # ground-truth contract below — the corpus is shingle-hashed once
+    # one checkpointed hash pass feeds BOTH the LSH dedup and the exact
+    # ground-truth contract below — the corpus is shingle-hashed once.
+    # localCheckpoint (eager) rather than persist(): its blocks live as
+    # long as the frame does, so no build leaves a corpus-sized entry
+    # in the session's cache manager
     hashes = corpus.select(
         F.col("doc_id"), shingle_hashes("text", 5, 3, fast=True).alias("__h")
-    ).persist()
-    hashes.count()
+    ).localCheckpoint()
     pairs = minhash_lsh_dedup_pairs(
         corpus, "doc_id", "text", threshold=0.8,
         num_hashes=16, hashed_sets=True, token_ngrams_n=3, fast_hash=True,
         shingle_hashes_df=hashes,
     )
-    # exact within-base truth from the SAME persisted hash pass
+    # exact within-base truth from the SAME checkpointed hash pass
     def jacc_ge(x, y):
         i = F.size(F.array_intersect(x, y)).cast("double")
         u = (F.size(x) + F.size(y)).cast("double") - i

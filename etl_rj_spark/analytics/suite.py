@@ -518,7 +518,7 @@ def temporal_dims_kernel(spark, sf_dir):
     )
 
 
-_PRIORITY_MAP = {"1-URGENT": "Urgente", "2-HIGH": "Alta", "3-MEDIUM": "Media"}
+_PRIORIDAD_LABELS = {"1-URGENT": "Urgente", "2-HIGH": "Alta", "3-MEDIUM": "Media"}
 
 @_q(
     "recode_static_map",
@@ -538,7 +538,7 @@ def recode_static_map(spark, sf_dir):
     return o.select(
         "o_orderkey",
         "o_orderpriority",
-        recode_values("o_orderpriority", _PRIORITY_MAP, default=F.lit("Otro")).alias("prioridad"),
+        recode_values("o_orderpriority", _PRIORIDAD_LABELS, default=F.lit("Otro")).alias("prioridad"),
     )
 
 

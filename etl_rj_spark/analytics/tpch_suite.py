@@ -718,7 +718,7 @@ def ntile_acctbal_quartiles(spark, sf_dir):
 
     This is the documented TPC-H window SHAPE — ntile is inherently a
     global sort through one partition (allowlisted as the one demo in
-    scripts/window_audit.py). Its BIT-IDENTICAL scale-safe twin is
+    etl_rj_spark/plans/audit.py). Its BIT-IDENTICAL scale-safe twin is
     ``ntile_acctbal_quartiles_scaled`` below (two-phase
     ``windows.ntile_exact``, r12); the approximate-boundary cousin is
     ``rfm_segmentation`` (quality_suite)."""
@@ -823,7 +823,7 @@ def kll_quantile_rollup(spark, sf_dir):
     )
     merged = (
         daily.groupBy("o_orderpriority")
-        # sorted (r15, order_audit.py): KLL merge accepts any order,
+        # sorted (for the order audit): KLL merge accepts any order,
         # but compaction detail depends on it — the lexicographic sort
         # of the sketch blobs makes the merged sketch (and so the
         # median estimate) run-deterministic, not just band-stable
@@ -907,7 +907,8 @@ def scd2_customer_history(spark, sf_dir):
     7th+1 key, brand-new keys for every 11th+3) applied to a history
     table with ``scd2_apply`` — changed keys get their open row closed
     at the effective date plus a fresh open row; no-ops and untouched
-    keys pass through; pre-existing closed history is never read. The
+    keys pass through; pre-existing closed history passes through
+    unchanged. The
     oracle states the expected history DIRECTLY (closed + kept + newly
     closed + new opens), so it checks semantics, not mechanism."""
     from etl_rj_spark.operators.scd import scd2_apply

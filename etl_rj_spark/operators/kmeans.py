@@ -186,7 +186,7 @@ def _assign(pts: DataFrame, centroids: DataFrame) -> DataFrame:
     (distance, cid) tie-break, and min over a set is independent of
     ``collect_list``'s nondeterministic order; the ``array_sort``
     wrapper (r15) additionally pins the PLAN-level order so the
-    order-determinism audit (scripts/order_audit.py) can verify
+    order-determinism audit (etl_rj_spark/plans/audit.py) can verify
     determinism structurally instead of by allowlist — k structs,
     one row, free. Assignment is a pure
     map over the corpus scan; the naive alternative (explode k rows
@@ -324,7 +324,9 @@ def persist_ivf_index(
     exists to avoid at 100 TB.
 
     ``probe_ivf_index`` refuses a family/dim mismatch via ``_meta``
-    rather than silently probing wrong cells."""
+    rather than silently probing wrong cells. With ``path_prefix`` the
+    three tables are external, each at ``{path_prefix}/{table}`` —
+    the ``persist_minhash_index`` layout."""
     spark = corpus.sparkSession
     cells = kmeans_assign(corpus, centroids, vec_col, id_col)
     idx = corpus.select(F.col(id_col), F.col(vec_col)).join(cells, id_col)
@@ -344,7 +346,7 @@ def persist_ivf_index(
         if partition_by:
             w = w.partitionBy(partition_by)
         if path_prefix:
-            w = w.option("path", f"{path_prefix}_{name.rsplit('_', 1)[-1]}")
+            w = w.option("path", f"{path_prefix}/{name}")
         w.saveAsTable(name)
 
     _write(idx, f"{table_prefix}_cells", partition_by="cell")

@@ -103,50 +103,61 @@ def scd2_apply(
     backwards in time. The guard is what makes redelivering an entire
     change stream a no-op.
 
-    Scale: one shuffle join of the change batch onto the OPEN slice
-    only (open rows ≈ |dim keys|, usually broadcast-or-bucketed);
-    closed history passes through untouched — at 100 TB that history
-    lives in a date-partitioned sink and is never read by the apply.
+    Shape: ONE full-outer join of the history with the batch on the
+    keys, with ``valid_to IS NULL`` in the join condition — closed rows
+    ride through unmatched, each change meets at most its key's open
+    row — then one explode of at most two output rows per joined row
+    (the history row, closed or not, and a fresh open row). Each input
+    appears once in the plan, so a fold of k batches grows the plan
+    linearly in k; closed history takes part in the one shuffle.
     """
     from pyspark.sql import functions as F
 
     key_list = list(keys)
-    open_rows = dim.filter(F.col(valid_to).isNull())
-    closed_rows = dim.filter(F.col(valid_to).isNotNull())
+    vt_type = dim.schema[valid_to].dataType
+    vf_type = dim.schema[valid_from].dataType
     ch = changes.select(
-        *key_list,
-        *[F.col(c).alias(f"__c_{c}") for c in compare_cols],
+        *[F.col(c).alias(f"__c_{c}") for c in [*key_list, *compare_cols]],
         F.col(effective_col).alias("__eff"),
     )
-    j = open_rows.join(ch, key_list, "full_outer")
+    cond = F.col(valid_to).isNull()
+    for k in key_list:
+        cond = cond & (F.col(k) == F.col(f"__c_{k}"))
+    j = dim.withColumn("__in_d", F.lit(True)).join(ch, cond, "full_outer")
+
+    in_dim = F.col("__in_d").isNotNull()
+    is_open = in_dim & F.col(valid_to).isNull()
     differs = F.lit(False)
     for c in compare_cols:
         differs = differs | ~F.col(c).eqNullSafe(F.col(f"__c_{c}"))
     has_change = F.col("__eff").isNotNull()
-    had_open = F.col(valid_from).isNotNull()
-    stale = had_open & has_change & (F.col("__eff") <= F.col(valid_from))
+    stale = F.coalesce(F.col("__eff") <= F.col(valid_from), F.lit(False))
     real_change = has_change & differs & ~stale
-    # open rows kept as-is: no change arrived, a no-op, or a stale one
-    kept_open = j.filter(had_open & ~real_change).select(dim.columns)
-    # open rows closed by a real (forward-in-time) change. __eff casts
-    # to the dim's own valid_to/valid_from types (r9 review fix, the
-    # scd2_apply_multi rule): a TIMESTAMP effective_date against a
-    # DATE-typed history would otherwise silently widen the union's
-    # schema and break the write-back
-    vt_type = dim.schema[valid_to].dataType
-    vf_type = dim.schema[valid_from].dataType
-    closed_now = j.filter(had_open & real_change).select(
-        *key_list, *compare_cols, valid_from,
-        F.col("__eff").cast(vt_type).alias(valid_to),
-    ).select(dim.columns)
-    # fresh open rows: changed keys + brand-new keys
-    new_open = j.filter(has_change & (~had_open | real_change)).select(
-        *key_list,
-        *[F.col(f"__c_{c}").alias(c) for c in compare_cols],
-        F.col("__eff").cast(vf_type).alias(valid_from),
-        F.lit(None).cast(vt_type).alias(valid_to),
-    ).select(dim.columns)
-    return closed_rows.unionByName(kept_open).unionByName(closed_now).unionByName(new_open)
+    # side 0: the history row as it was, or closed by a real
+    # (forward-in-time) change; side 1: a fresh open row for a changed
+    # or brand-new key. __eff casts to the dim's own valid_to/valid_from
+    # types (the scd2_apply_multi rule): a TIMESTAMP effective_date
+    # against a DATE-typed history would otherwise silently widen the
+    # output schema and break the write-back
+    close = is_open & real_change
+    sides = F.array_compact(F.array(
+        F.when(in_dim, F.lit(0)),
+        F.when(has_change & (~is_open | real_change), F.lit(1)),
+    ))
+
+    def pick(c: str):
+        if c == valid_to:
+            old = F.when(close, F.col("__eff").cast(vt_type)).otherwise(F.col(c))
+            new = F.lit(None).cast(vt_type)
+        elif c == valid_from:
+            old, new = F.col(c), F.col("__eff").cast(vf_type)
+        else:
+            old, new = F.col(c), F.col(f"__c_{c}")
+        return F.when(F.col("__side") == 0, old).otherwise(new).alias(c)
+
+    return j.withColumn("__side", F.explode(sides)).select(
+        *[pick(c) for c in dim.columns]
+    )
 
 
 def scd2_apply_multi(

@@ -1,4 +1,3 @@
 """Physical-plan introspection: the scale-audit helpers that keep the
-engine honest about broadcasts, pushdown, and shuffle counts."""
-
-from etl_rj_spark.plans.audit import explain_counts, pushed_filters  # noqa: F401
+engine honest about broadcasts, pushdown, and shuffles
+(:mod:`etl_rj_spark.plans.audit`)."""

@@ -1,27 +1,24 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") for bench-tagged queries into
-plans/r16/<name>_<suffix>.txt (suffix = argv[1], default "before").
+<out_dir>/<name>_<suffix>.txt (suffix: first positional argument,
+default "before").
 
-r16 fixes over r15_capture_plans.py (VERDICT r15 "What's wrong" #2):
-the r15 script captured only the FINAL DataFrame's plan, so for
-barrier queries (localCheckpoint inside the build) the committed
-"plan" was just the post-checkpoint stage — the subtree an
-optimization claim was about executed during capture and vanished
-behind a LogicalRDD scan, making claims like "23 Exchanges → 4"
-unverifiable from the tree. This script monkey-patches
-``DataFrame.localCheckpoint`` for the duration of each build so every
-barrier input's plan is dumped as its own numbered section BEFORE the
-checkpoint executes; the final plan follows as the last section. The
-whole query's physical shape is therefore countable from the one
-committed file: total Exchanges = sum over sections, join strategies
-per stage, PushedFilters at the real scans.
+For barrier queries (``localCheckpoint`` inside the build) the final
+frame's plan is only the post-checkpoint stage: the subtree before the
+barrier has already executed and hides behind a LogicalRDD scan. So
+``DataFrame.localCheckpoint`` is patched for the duration of each
+build, and every barrier input's plan is dumped as its own numbered
+section BEFORE the checkpoint executes; the final plan follows as the
+last section. The whole query's physical shape is countable from one
+file: total Exchanges = sum over sections, join strategies per stage,
+PushedFilters at the real scans.
 
-Also per ADVICE r15: requested names are validated against the bench
-set up front (unknown names are reported, not a bare KeyError that
-aborts the loop).
+Requested names are validated against the bench set up front (unknown
+names are reported and skipped).
 
-Usage: python scripts/r16_capture_plans.py [before|after] [name ...]
-(no names → all bench queries).
+Usage: python scripts/capture_plans.py [--out DIR] [before|after] [name ...]
+(no names → all bench queries; DIR defaults to plans/, which git
+ignores; SPARK_GRAFT_SF_DIR picks the data, default sf0.1).
 """
 
 from __future__ import annotations
@@ -29,7 +26,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Spark 4: pyspark.sql.DataFrame is the abstract base; sessions build
 # pyspark.sql.classic.dataframe.DataFrame instances whose OWN
@@ -51,12 +49,15 @@ def _explain(df: DataFrame) -> str:
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    args = sys.argv[1:]
+    out_dir = os.path.join(REPO, "plans")
+    if "--out" in args:
+        i = args.index("--out")
+        out_dir = args[i + 1]
+        del args[i:i + 2]
+    suffix = args[0] if args else "before"
+    names = args[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     bench = {n: q for n, q in REGISTRY.items() if q.bench}
@@ -69,7 +70,7 @@ def main() -> None:
         )
     targets = [n for n in names if n in bench] or sorted(bench)
 
-    spark = get_spark(app_name="r16-plan-capture")
+    spark = get_spark(app_name="plan-capture")
     real_ckpt = DataFrame.localCheckpoint
 
     for name in targets:

@@ -344,10 +344,9 @@ def main() -> int:
         args.remove("--rebuild")
     only = set(args)
 
-    from etl_rj_spark.analytics import ordered_registry  # noqa: E402
+    from etl_rj_spark.analytics import REGISTRY  # noqa: E402
 
-    reg = ordered_registry()
-    names = [n for n in reg if not only or n in only]
+    names = [n for n in REGISTRY if not only or n in only]
 
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
@@ -369,7 +368,7 @@ def main() -> int:
     counts = {"ok": 0, "rows_only": 0, "refused_by_design": 0,
               "DIVERGES": 0, "ENGINE_ERR": 0, "ORACLE_ERR": 0}
     for n in names:
-        q = reg[n]
+        q = REGISTRY[n]
         t1 = time.time()
         try:
             df = q.build(spark, sf_dir)

@@ -51,10 +51,9 @@ def main() -> int:
         sf_dir = args.pop(0)
     only = set(args)
 
-    from etl_rj_spark.analytics import ordered_registry  # noqa: E402
+    from etl_rj_spark.analytics import REGISTRY  # noqa: E402
 
-    reg = ordered_registry()
-    names = [n for n in reg if not only or n in only]
+    names = [n for n in REGISTRY if not only or n in only]
     missing = only - set(names)
     if missing:
         print(f"unknown query names: {sorted(missing)}", file=sys.stderr)
@@ -72,7 +71,7 @@ def main() -> int:
     detail: dict[str, dict] = {}
     ok = rows_only = failed = 0
     for n in names:
-        q = reg[n]
+        q = REGISTRY[n]
         t1 = time.time()
         try:
             df = q.build(spark, sf_dir)

@@ -85,7 +85,7 @@ def main() -> None:
 
     sf = synth_dir(base, copies)
 
-    from etl_rj_spark.analytics import ordered_registry
+    from etl_rj_spark.analytics import REGISTRY
     from tests.oracle_utils import TABLES, compare_spark_duck
 
     spark = get_spark(app_name="scale-correctness")
@@ -98,7 +98,6 @@ def main() -> None:
         p = f"{sf}/{t}.parquet"
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
-    reg = ordered_registry()
 
     results: dict[str, dict] = {}
     n_pass = n_fail = n_skip = n_large = 0
@@ -110,7 +109,7 @@ def main() -> None:
     # so (no silent truncation): the kernel's value-level correctness
     # is already hash-pinned at base scale every round.
     MAX_COMPARE_ROWS = 2_000_000
-    for name, q in reg.items():
+    for name, q in REGISTRY.items():
         if only and name not in only:
             continue
         if q.oracle is None or name in SKIP_NAMES or SKIP_TAGS & set(q.tags):

@@ -3,7 +3,7 @@ one registry query in a FRESH SparkSession/JVM, print its row count.
 
 Run as ``python tests/concurrent_worker.py <query_name> <sf_dir>``.
 Two of these running at once is the exact scenario VERDICT r13 §wrong
-#1 reproduced (window_audit alongside pytest): with fixed-name scratch
+#1 reproduced (a plan audit alongside pytest): with fixed-name scratch
 roots, one process's rmtree-on-entry deletes the other's LIVE
 streaming checkpoint mid-run. With pid-suffixed roots they are
 disjoint and both must succeed.

@@ -2,7 +2,7 @@
 
 The registry's scratch roots used to be fixed-name
 (``/tmp/etl_rj_cov_<name>``): two concurrent registry runs — e.g.
-``scripts/window_audit.py`` alongside a live pytest — were mutually
+``python -m etl_rj_spark.plans.audit`` alongside a live pytest — were mutually
 destructive, one process's rmtree-on-entry deleting the other's LIVE
 streaming checkpoint (reproduced by the r13 judge as
 ``FileNotFoundException: .../etl_rj_cov_stream_dedup_wm/ck/state/0/132``).

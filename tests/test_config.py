@@ -92,25 +92,3 @@ class TestJdbcUrl:
         # but the credential is still resolvable where it belongs
         assert cfg.jdbc_properties()["password"] == "s3cret"
 
-
-def test_driver_verdict_staleness_invariant():
-    """VERDICT r11 #8: the rotation discipline is a CONTRACT — every
-    registered query has a driver verdict, and none is more than
-    MAX_AGE_ROUNDS behind the newest round unless staged in the
-    current 50-name prefix. Replaying the rule against the round-8
-    history (the state round 9 opened with) must FAIL: 60+ queries
-    were then unverdicted and couldn't all fit one prefix — the debt
-    this invariant exists to surface."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from staleness_check import staleness_violations
-
-    assert staleness_violations(repo) == []
-    replay_r9 = staleness_violations(repo, upto_round=8)
-    assert len(replay_r9) > 10, (
-        "expected the r9-era verification debt to violate the invariant",
-        len(replay_r9),
-    )

@@ -608,6 +608,29 @@ class TestScd2Apply:
             (r.k, r.seg, str(r.valid_from), str(r.valid_to)) for r in df.collect()
         )
 
+    def test_fold_plan_grows_linearly(self, spark):
+        """Each scd2_apply call references its history once, so an
+        8-call fold's optimized plan stays within 8× one call's (a form
+        that read the history several times multiplied the plan per
+        call). Checked after every call, so a regression fails early
+        instead of optimizing a huge plan."""
+        from etl_rj_spark.operators.scd import scd2_apply
+
+        h = self._dim(spark)
+        sizes = []
+        for i in range(8):
+            b = self._changes(spark, [(1, f"A{i}", f"{1996 + i}-01-01")])
+            h = scd2_apply(h, b, ["k"], ["seg"])
+            plan = h._jdf.queryExecution().optimizedPlan().toString()
+            sizes.append(len(plan.splitlines()))
+            assert sizes[-1] <= (i + 1) * sizes[0], sizes
+        rows = self._canon(h)
+        assert rows[0] == (1, "A", "1995-01-01", "1996-01-01")
+        assert rows[-2:] == [
+            (1, "A7", "2003-01-01", "None"), (2, "B", "1995-01-01", "None"),
+        ]
+        assert len(rows) == 10
+
     def test_multi_matches_per_date_fold(self, spark):
         """scd2_apply_multi on a many-date batch == folding scd2_apply
         per ascending distinct date: stale changes dropped, no-op

@@ -1,12 +1,15 @@
 """The primary correctness gate, locally: every REGISTRY query with an
 oracle must match DuckDB on the shared parquet tables (emulates the
-driver's CORRECTNESS check at sf0.001 for speed)."""
+driver's CORRECTNESS check at sf0.001 for speed). Every query's plan
+also passes the three plan audits (etl_rj_spark.plans.audit) on the
+same build, before it executes."""
 
 from __future__ import annotations
 
 import pytest
 
 from etl_rj_spark.analytics import REGISTRY
+from etl_rj_spark.plans.audit import assert_plan_audits
 from tests.oracle_utils import compare_spark_duck, duck_connection
 
 _WITH_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
@@ -23,6 +26,7 @@ def duck(sf_dir):
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     q = REGISTRY[name]
     df = q.build(spark, sf_dir)
+    assert_plan_audits(name, df)
     compare_spark_duck(df, duck, q.oracle)
 
 
@@ -30,6 +34,7 @@ def test_rows_only_queries_run(spark, sf_dir):
     for name, q in REGISTRY.items():
         if q.oracle is None:
             df = q.build(spark, sf_dir)
+            assert_plan_audits(name, df)
             assert df.count() >= 0, name
 
 

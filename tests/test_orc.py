@@ -116,7 +116,7 @@ def test_hll_partial_agg_plan_shape(spark, sf_dir):
     daily-partials → union-merge path carries exactly two exchanges
     (one per grouping level), with map-side partial sketch aggregation
     before each — no extra shuffle, no join in the partial path."""
-    from etl_rj_spark.plans import explain_counts
+    from etl_rj_spark.plans.audit import explain_counts
 
     ev = read_parquet_table(spark, f"{sf_dir}/events.parquet")
     merged = (

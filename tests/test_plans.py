@@ -9,7 +9,7 @@ import re
 from pyspark.sql import functions as F
 
 from etl_rj_spark.analytics import REGISTRY
-from etl_rj_spark.plans import explain_counts, pushed_filters
+from etl_rj_spark.plans.audit import explain_counts, pushed_filters
 
 
 def test_dim_joins_broadcast(spark, sf_dir):

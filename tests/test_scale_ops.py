@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_rj_spark.operators.skew import salted_join
-from etl_rj_spark.plans import explain_counts
+from etl_rj_spark.plans.audit import explain_counts
 from etl_rj_spark.sinks.bucketed import write_bucketed
 from etl_rj_spark.sources.parquet import read_parquet_table
 
@@ -736,3 +736,43 @@ def test_ivf_index_append_is_redelivery_idempotent(spark, sf_dir):
         for p in (pa, pb):
             for s in ("cells", "centroids", "meta"):
                 spark.sql(f"DROP TABLE IF EXISTS {p}_{s}")
+
+
+def test_ivf_index_path_prefix_holds_all_three_tables(spark, sf_dir, tmp_path):
+    """With a path prefix, persist_ivf_index writes each table at
+    ``{path_prefix}/{table}`` — the persist_minhash_index layout — so
+    the prefix directory holds all three tables and nothing appears
+    beside it."""
+    from etl_rj_spark.operators.kmeans import (
+        kmeans_fit,
+        persist_ivf_index,
+        probe_ivf_index,
+    )
+
+    e = read_parquet_table(spark, f"{sf_dir}/embeddings.parquet")
+    corpus = e.filter(F.col("vec_id") >= 5)
+    prefix = f"ivf_layout_{uuid.uuid4().hex[:8]}"
+    root = tmp_path / "idx"
+    tables = [f"{prefix}_{s}" for s in ("cells", "centroids", "meta")]
+    try:
+        persist_ivf_index(
+            corpus, kmeans_fit(corpus, k=4, iters=1), prefix, path_prefix=str(root)
+        )
+        assert sorted(p.name for p in root.iterdir()) == sorted(tables)
+        assert [p.name for p in tmp_path.iterdir()] == ["idx"]
+        assert probe_ivf_index(spark, e.filter(F.col("vec_id") < 5), prefix, k=3).count() > 0
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_minhash_lsh_pairs_scaled_leaves_cache_empty(spark, sf_dir):
+    """The scaled MinHash build hashes its corpus once for both the LSH
+    path and the recall contract through a localCheckpoint, not a
+    persist(): once the query is built and collected, the session's
+    cache manager holds nothing."""
+    from etl_rj_spark.analytics import REGISTRY
+
+    spark.catalog.clearCache()
+    REGISTRY["minhash_lsh_pairs_scaled"].build(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
