@@ -109,7 +109,9 @@ def scd2_apply(
     row — then one explode of at most two output rows per joined row
     (the history row, closed or not, and a fresh open row). Each input
     appears once in the plan, so a fold of k batches grows the plan
-    linearly in k; closed history takes part in the one shuffle.
+    linearly in k; closed history takes part in the one shuffle. For a
+    long closed history, :func:`scd2_apply_multi` applies a batch of
+    many dates in one call and keeps closed rows out of the shuffle.
     """
     from pyspark.sql import functions as F
 

@@ -485,6 +485,8 @@ class TestStormSafeFamilies:
         import gc
         import time
 
+        from py4j.clientserver import DEFAULT_WORKER_SLEEP_TIME
+
         from etl_rj_spark.operators.text_dedup import near_dup_pairs
 
         sc = spark.sparkContext
@@ -495,15 +497,25 @@ class TestStormSafeFamilies:
         def drain(target: int, deadline_s: float = 30.0) -> int:
             """GC both runtimes until pinned storage is back at
             ``target`` (ContextCleaner frees checkpoint blocks only
-            after a JVM GC enqueues their weak refs)."""
+            after a JVM GC enqueues their weak refs).
+
+            py4j releases the JVM side of a dropped Python handle on a
+            finalizer thread that polls every
+            ``DEFAULT_WORKER_SLEEP_TIME`` seconds. Until then the handle
+            keeps its object reachable: ``out``/``df`` hold the
+            checkpointed plans, and the map ``n_pinned`` returns holds
+            every persistent RDD it counts. A JVM GC sooner than that
+            poll therefore keeps them alive, and the next probe pins
+            them again; so each round sleeps past one poll before it
+            collects."""
             end = time.time() + deadline_s
-            while time.time() < end:
+            while True:
                 gc.collect()
+                time.sleep(DEFAULT_WORKER_SLEEP_TIME + 0.5)
                 sc._jvm.System.gc()
-                if n_pinned() <= target:
-                    return n_pinned()
-                time.sleep(0.5)
-            return n_pinned()
+                n = n_pinned()
+                if n <= target or time.time() >= end:
+                    return n
 
         # baseline tolerates residue pinned by EARLIER tests in the
         # session — the contract under test is NON-GROWTH across calls
@@ -601,6 +613,31 @@ class TestScd2Apply:
         h = scd2_apply(dim, noop, ["k"], ["seg"])
         assert sorted((r.k, r.seg, str(r.valid_to)) for r in h.collect()) == [
             (1, "A", "None"), (2, "B", "None"),
+        ]
+
+    def test_open_row_with_null_valid_from(self, spark):
+        """An open row whose valid_from is NULL stays in the history;
+        no change can be stale against it, so a real change closes it
+        at the effective date and opens a fresh row."""
+        from etl_rj_spark.operators.scd import scd2_apply
+
+        dim = self._dim(spark).selectExpr(
+            "k", "seg",
+            "IF(k = 1, CAST(NULL AS DATE), valid_from) valid_from", "valid_to",
+        )
+        untouched = scd2_apply(
+            dim, self._changes(spark, [(2, "B", "1996-01-01")]), ["k"], ["seg"]
+        )
+        assert self._canon(untouched) == [
+            (1, "A", "None", "None"), (2, "B", "1995-01-01", "None"),
+        ]
+        changed = scd2_apply(
+            dim, self._changes(spark, [(1, "A2", "1996-01-01")]), ["k"], ["seg"]
+        )
+        assert self._canon(changed) == [
+            (1, "A", "None", "1996-01-01"),
+            (1, "A2", "1996-01-01", "None"),
+            (2, "B", "1995-01-01", "None"),
         ]
 
     def _canon(self, df):
