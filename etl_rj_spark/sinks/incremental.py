@@ -22,15 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_rj_spark.operators.dedup import anti_join_new_rows
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence check via the Hadoop FS API (works
-    for local, HDFS, s3a — wherever the sink lives). Thin alias over
-    the shared scheme-aware helper."""
-    from etl_rj_spark.streaming.fsutil import path_exists
-
-    return path_exists(spark, path)
+from etl_rj_spark.streaming.fsutil import path_exists
 
 
 def append_incremental(
@@ -43,7 +35,7 @@ def append_incremental(
     """Append only rows whose key tuple is not already in the sink.
     Returns the number of rows inserted (0 on re-run — the reference's
     recovery invariant)."""
-    if _path_exists(spark, path):
+    if path_exists(spark, path):
         existing = spark.read.parquet(path).select(*keys)
         new = anti_join_new_rows(df, existing, keys, on_null_key=on_null_key)
     else:
@@ -61,7 +53,7 @@ def append_incremental(
     # later read/append sees a valid empty table instead of
     # PATH_NOT_FOUND — a source whose filter matched nothing is a
     # normal day, not a broken sink (r10 degenerate-input sweep fix)
-    if inserted or not _path_exists(spark, path):
+    if inserted or not path_exists(spark, path):
         new.write.mode("append").parquet(path)
     return inserted
 

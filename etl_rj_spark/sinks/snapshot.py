@@ -15,7 +15,11 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_rj_spark.streaming.fsutil import has_visible_data, path_exists
+from etl_rj_spark.streaming.fsutil import (  # noqa: F401 (_sidecar_needs_write: pinned by tests)
+    _sidecar_needs_write,
+    ensure_state_schema,
+    read_state_or_schema,
+)
 
 
 def append_snapshot(
@@ -29,66 +33,10 @@ def append_snapshot(
     stamp = F.lit(snapshot_date) if snapshot_date is not None else F.current_date()
     stamped = df.withColumn(snapshot_col, stamp.cast("date"))
     stamped.write.mode("append").partitionBy(snapshot_col).parquet(path)
-    # schema sidecar: a PARTITIONED write of a 0-row batch lands zero
-    # files, so a table whose every snapshot was empty would be
-    # unreadable (UNABLE_TO_INFER_SCHEMA). `_schema` is
-    # underscore-prefixed — invisible to partition discovery — and a
-    # plain 0-row parquet write there preserves the full schema for
-    # ``read_latest_snapshot``'s fallback (r10 degenerate-input fix).
-    # VALIDATED write-skip, not a bare existence check (ADVICE r11):
-    # skipping on path_exists alone would leave a half-written sidecar
-    # (interrupted first overwrite) broken forever and would pin the
-    # first append's schema even after the table's schema evolved, so
-    # the skip requires the sidecar to be READABLE and to match this
-    # batch's columns/types; unreadable or drifted → rewrite. The
-    # rewrite costs one extra 0-row job only on repair/evolution —
-    # steady-state appends still skip it — and its brief last-writer-
-    # wins absence window is covered by the same single-writer posture
-    # as ``expire_snapshots`` (one orchestrator drives this sink).
-    if _sidecar_needs_write(stamped, f"{path}/_schema"):
-        stamped.limit(0).write.mode("overwrite").parquet(f"{path}/_schema")
+    # a PARTITIONED write of a 0-row batch lands zero files; the
+    # sidecar keeps a table whose every snapshot was empty readable
+    ensure_state_schema(stamped, path)
     return stamped
-
-
-def _sidecar_needs_write(batch: DataFrame, sidecar: str) -> bool:
-    """True when the ``_schema`` sidecar is absent, unreadable, or no
-    longer matches the batch's (name, type) shape. Nullability is
-    ignored AT EVERY NESTING LEVEL: a parquet round-trip relaxes
-    non-null flags both on top-level fields and INSIDE types
-    (ArrayType.containsNull, MapType.valueContainsNull, inner struct
-    fields), so the comparison uses a recursively-nullable normal form
-    — comparing raw dataType flagged every append of a table with a
-    non-null-element array column as drift, reintroducing the
-    per-append sidecar job the validated skip exists to avoid
-    (ADVICE r12)."""
-    spark = batch.sparkSession
-    if not path_exists(spark, sidecar):
-        return True
-    try:
-        existing = spark.read.parquet(sidecar).schema
-    except Exception:  # corrupt/partial sidecar — repair it
-        return True
-
-    def shape(schema):
-        return [(f.name, _as_nullable(f.dataType)) for f in schema.fields]
-
-    return shape(existing) != shape(batch.schema)
-
-
-def _as_nullable(dt):
-    """``dt`` with every nested nullability flag forced to True —
-    parquet's round-trip normal form."""
-    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
-
-    if isinstance(dt, StructType):
-        return StructType(
-            [StructField(f.name, _as_nullable(f.dataType), True) for f in dt.fields]
-        )
-    if isinstance(dt, ArrayType):
-        return ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
-    return dt
 
 
 def read_latest_snapshot(spark: SparkSession, path: str, snapshot_col: str = "fecha_carga") -> DataFrame:
@@ -103,20 +51,9 @@ def read_latest_snapshot(spark: SparkSession, path: str, snapshot_col: str = "fe
 
     A table whose snapshots were all EMPTY (zero partition
     directories) reads back as a 0-row frame with the schema preserved
-    by ``append_snapshot``'s ``_schema`` sidecar — not an inference
-    error (r10 degenerate-input fix). The sidecar path is chosen by an
-    EXPLICIT visible-files probe, never by catching exceptions around
-    the read: a corrupt part-file footer, a permissions error, or a
-    transient FS failure over a table that HAS data must fail loudly,
-    not silently serve an empty snapshot (ADVICE r10, medium). The
-    probe-then-read pair is not atomic; like every ledgered reader
-    here it assumes the documented single-writer posture (ADVICE r11
-    — see ``streaming/fsutil.read_state_or_schema``)."""
-    if has_visible_data(spark, path) or not path_exists(spark, f"{path}/_schema"):
-        df = spark.read.parquet(path)
-    else:
-        # zero partitions materialized — fall back to the sidecar
-        return spark.read.parquet(f"{path}/_schema")
+    by ``append_snapshot``'s ``_schema`` sidecar, not an inference
+    error (``streaming/fsutil.read_state_or_schema``)."""
+    df = read_state_or_schema(spark, path)
     latest = df.select(F.max(snapshot_col).alias("m")).first()[0]
     if latest is None:
         return df.limit(0)

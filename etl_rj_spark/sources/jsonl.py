@@ -95,24 +95,27 @@ def quarantine_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(good, quarantined): good rows lose the corrupt column;
     quarantined rows keep the raw line for repair/re-ingest.
 
-    The frame is cached first: Spark disallows queries over a raw JSON
-    scan that reference only the internal corrupt-record column (the
-    scan would have to re-parse just to report corruption), and both
-    split sides re-reading the 100 TB input once each would double the
-    ingest scan anyway — one materialization, two cheap filters is the
-    intended pattern (per Spark's own error guidance).
+    The frame is materialized once first: Spark disallows queries over
+    a raw JSON scan that reference only the internal corrupt-record
+    column (the scan would have to re-parse just to report
+    corruption), and both split sides re-reading the 100 TB input
+    once each would double the ingest scan anyway — one
+    materialization, two cheap filters is the intended pattern (per
+    Spark's own error guidance).
 
-    CACHE-STALENESS CAVEAT (r13): because this caches the scan, a
-    caller that later REWRITES the same source path and re-reads it in
-    the same session gets the stale cached relation — the CacheManager
-    substitutes by plan identity (same rootPath + schema + options),
-    silently serving the old bytes (observed: a rewritten fixture's
-    corrupt row vanished from the re-read). Call
-    ``spark.catalog.refreshByPath(path)`` after any rewrite of a path
-    read through this split; in production, treat an ingest landing
-    path as append-only/immutable per batch (the lake convention that
-    makes the cache safe)."""
-    df = df.cache()
+    The materialization is a lazy ``localCheckpoint``, not ``cache()``:
+    the first action on either side runs the scan once and the other
+    side reads its blocks, which the ContextCleaner frees once both
+    frames are unreachable. Nothing is registered in the session's
+    CacheManager, so the split pins no storage for the session and a
+    later read of the same path is never served these rows. The split
+    is a snapshot of the input at that first action. A caller that
+    rewrites the source path and re-reads it in the same session
+    still calls ``spark.catalog.refreshByPath(path)`` after the
+    rewrite, because Spark's file-listing cache can keep the old file
+    list; in production, treat an ingest landing path as
+    append-only/immutable per batch."""
+    df = df.localCheckpoint(eager=False)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")

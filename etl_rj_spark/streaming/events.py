@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_rj_spark.sources.parquet import normalize_timestamps
+from etl_rj_spark.streaming.fsutil import _drain
 
 
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -190,9 +191,4 @@ def stream_enrich_with_dim(
             "overwrite"
         ).parquet(f"{out_path}/batch={int(batch_id)}")
 
-    return (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, checkpoint, enrich)

@@ -1,18 +1,21 @@
-"""Path-scheme-aware Hadoop-FS helpers shared by the streaming state
-maintainers.
+"""Helpers shared by the streaming state maintainers and the parquet
+sinks: path-scheme-aware Hadoop-FS probes, the ``_schema`` sidecar
+that keeps an empty state table readable, and the one drain chain
+behind every ``foreachBatch`` sink under ``streaming/``.
 
 ``FileSystem.get(conf)`` resolves the DEFAULT filesystem, which throws
 ``IllegalArgumentException: Wrong FS`` the moment a state root lives on
 a different scheme (an ``s3a://`` ledger under an ``hdfs://`` default,
 or ``file://`` locally) — fatal to the 100 TB object-store posture the
 ledgered sinks document. Every probe here resolves the filesystem FROM
-the path instead (the house pattern: ``sketches._table_exists``,
-``operators/scd.py``, ``sources/manifest.py``, the parquet sinks).
+the path instead (the house pattern: ``operators/scd.py``,
+``sources/manifest.py``, the parquet sinks).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 
 def hadoop_path_fs(spark: SparkSession, path_str: str):
@@ -57,18 +60,66 @@ def has_visible_data(spark: SparkSession, path_str: str) -> bool:
     return False
 
 
-def ensure_state_schema(df, path_str: str) -> None:
-    """Materialize a partitioned state table's SCHEMA even when no
-    fold has landed rows yet: write ``df.limit(0)`` as a plain (non-
+def ensure_state_schema(df: DataFrame, path_str: str) -> None:
+    """Materialize a partitioned table's SCHEMA even when no write has
+    landed rows yet: write ``df.limit(0)`` as a plain (non-
     partitioned) parquet under ``{path}/_schema``. Underscore-prefixed
     paths are invisible to Spark's partition discovery, so the sidecar
     never pollutes real reads; a 0-row PLAIN write keeps the schema
-    where a 0-row PARTITIONED write lands nothing at all. Maintainers
-    call this when an empty drain would otherwise leave NO table — a
-    day with zero events is a normal day, and a serving read over it
-    must see an empty state table, not PATH_NOT_FOUND (r10
-    degenerate-input sweep fix)."""
-    df.limit(0).write.mode("overwrite").parquet(f"{path_str}/_schema")
+    where a 0-row PARTITIONED write lands nothing at all. A day with
+    zero events is a normal day, and a serving read over it must see
+    an empty table, not PATH_NOT_FOUND or UNABLE_TO_INFER_SCHEMA.
+
+    The write is skipped when the sidecar is already valid
+    (:func:`_sidecar_needs_write`), so steady-state callers pay one
+    existence probe and one schema read, not a write. Skipping on
+    existence alone would leave a half-written sidecar (interrupted
+    first overwrite) broken forever and pin the first schema after
+    the table's schema evolved. The rewrite's brief last-writer-wins
+    absence window is covered by the single-writer posture (see
+    :func:`read_state_or_schema`)."""
+    sidecar = f"{path_str}/_schema"
+    if _sidecar_needs_write(df, sidecar):
+        df.limit(0).write.mode("overwrite").parquet(sidecar)
+
+
+def _sidecar_needs_write(batch: DataFrame, sidecar: str) -> bool:
+    """True when the ``_schema`` sidecar is absent, unreadable, or no
+    longer matches the batch's (name, type) shape. Nullability is
+    ignored AT EVERY NESTING LEVEL: a parquet round-trip relaxes
+    non-null flags both on top-level fields and INSIDE types
+    (ArrayType.containsNull, MapType.valueContainsNull, inner struct
+    fields), so the comparison uses a recursively-nullable normal form
+    — comparing raw dataType would flag every append of a table with a
+    non-null-element array column as drift."""
+    spark = batch.sparkSession
+    if not path_exists(spark, sidecar):
+        return True
+    try:
+        existing = spark.read.parquet(sidecar).schema
+    except Exception:  # corrupt/partial sidecar — repair it
+        return True
+
+    def shape(schema):
+        return [(f.name, _as_nullable(f.dataType)) for f in schema.fields]
+
+    return shape(existing) != shape(batch.schema)
+
+
+def _as_nullable(dt):
+    """``dt`` with every nested nullability flag forced to True —
+    parquet's round-trip normal form."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def read_state_or_schema(spark: SparkSession, path_str: str):
@@ -103,6 +154,22 @@ def read_state_or_schema(spark: SparkSession, path_str: str):
         return spark.read.parquet(path_str)
     # zero real files, sidecar present — serve the empty state
     return spark.read.parquet(f"{path_str}/_schema")
+
+
+def _drain(stream: DataFrame, checkpoint: str, fold) -> StreamingQuery:
+    """Start ``stream`` as a ``foreachBatch(fold)`` query that drains
+    the input available now (``Trigger.AvailableNow``) and then stops:
+    the drain policy of every ``foreachBatch`` sink under
+    ``streaming/``. ``fold(batch_df, batch_id)`` runs once per
+    micro-batch, and the checkpoint records which input each batch
+    consumed, so a restarted drain redelivers only the batch that had
+    not committed, under the same ``batch_id``."""
+    return (
+        stream.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def committed_batch_ids(spark: SparkSession, ledger_dir: str) -> list[int]:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_rj_spark.operators.dedup import anti_join_new_rows
+from etl_rj_spark.streaming.fsutil import _drain, path_exists
 
 
 def stream_incremental_append(
@@ -45,8 +46,6 @@ def stream_incremental_append(
         # broad catch would also swallow real analysis errors (schema
         # drift, a renamed key column) and silently disable the
         # anti-join dedup this sink's idempotence depends on
-        from etl_rj_spark.streaming.fsutil import path_exists
-
         existing = (
             spark.read.parquet(target_path).select(*keys)
             if path_exists(spark, target_path)
@@ -62,12 +61,7 @@ def stream_incremental_append(
             fresh = fresh.localCheckpoint()
         fresh.write.mode("append").parquet(target_path)
 
-    return (
-        new_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(new_stream, checkpoint, upsert)
 
 
 def stream_incremental_append_jdbc_atomic(
@@ -102,9 +96,4 @@ def stream_incremental_append_jdbc_atomic(
             staging_table=f"{table}_STG_{batch_id}",
         )
 
-    return (
-        new_stream.writeStream.foreachBatch(publish)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(new_stream, checkpoint, publish)

@@ -10,12 +10,11 @@ exact (zero sketch error): the incremental posture for mean /
 variance / z-score / OLS-grade statistics over a stream, serving any
 rollup level with no event rescan.
 
-Fold/ledger mechanics mirror ``fold_topk_batch``: per-batch partials
-merge into a day-partitioned table, only touched days read/rewritten
-(dynamic partition overwrite), every step null-day-safe, and a
-(group, day) cell that already folded a batch id ignores its
-redelivery. Values must be INTEGER (cents/micros — scale yours up);
-NULL values carry no mass.
+The fold is :func:`etl_rj_spark.streaming.sketches._fold_days` with
+the ledger kept per (group, day) cell: only touched days are read and
+rewritten, every step is null-day-safe, and a cell that already
+folded a batch id ignores its redelivery. Values must be INTEGER
+(cents/micros — scale yours up); NULL values carry no mass.
 
 Serving note: moment sums double exactly under re-folds of the same
 data ((2n, 2Σx, 2Σx²) give the identical mean and variance — powers
@@ -29,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from etl_rj_spark.streaming.sketches import _table_exists, _touched_days_cond
+from etl_rj_spark.streaming.fsutil import _drain, read_state_or_schema
+from etl_rj_spark.streaming.sketches import _fold_days
 
 
 def moment_batch(
@@ -64,70 +64,17 @@ def fold_moments_batch(
     table at ``target_path``. Sums are additive, so redelivery safety
     is the batch-id ledger: a (group, day) cell that already folded
     this ``batch_id`` keeps its state untouched."""
-    spark = batch_df.sparkSession
-    fresh = moment_batch(batch_df, group_col, ts_col, value_col).localCheckpoint()
-    cond = _touched_days_cond(fresh)
-    if cond is None:
-        # empty drain: materialize the ledgered table's schema so a
-        # serving read sees an empty state table (r10 sweep fix)
-        if not _table_exists(spark, target_path):
-            from etl_rj_spark.streaming.fsutil import ensure_state_schema
-
-            ensure_state_schema(
-                fresh.select(
-                    "grp", "day", "n", "s", "ss",
-                    F.array().cast("array<long>").alias("batch_ids"),
-                ),
-                target_path,
-            )
-        return
-    if _table_exists(spark, target_path):
-        existing = spark.read.parquet(target_path).where(cond)
-    else:
-        existing = fresh.select(
-            "grp", "day", "n", "s", "ss",
-            F.array().cast("array<long>").alias("batch_ids"),
-        ).limit(0)
-    existing = existing.localCheckpoint()
-
-    folded = existing.filter(
-        F.array_contains("batch_ids", F.lit(batch_id))
-    ).select(F.col("grp").alias("__fg"), F.col("day").alias("__fd"))
-    fresh_new = fresh.join(
-        folded,
-        F.col("grp").eqNullSafe(F.col("__fg"))
-        & F.col("day").eqNullSafe(F.col("__fd")),
-        "left_anti",
-    )
-    merged = (
-        existing.select("grp", "day", "n", "s", "ss", "batch_ids")
-        .unionByName(
-            fresh_new.select(
-                "grp", "day", "n", "s", "ss",
-                F.array(F.lit(batch_id).cast("long")).alias("batch_ids"),
-            )
-        )
-        .groupBy("grp", "day")
-        .agg(
+    _fold_days(
+        moment_batch(batch_df, group_col, ts_col, value_col),
+        target_path,
+        ("grp", "day"),
+        [
             F.sum("n").alias("n"),
             F.sum("s").cast("decimal(38,0)").alias("s"),
             F.sum("ss").cast("decimal(38,0)").alias("ss"),
-            # RETENTION (ADVICE r7): the per-cell ledger grows one id
-            # per folded batch forever. On a long-running stream,
-            # compact it periodically by dropping ids ≤ the streaming
-            # checkpoint's committed epoch (redelivery below that
-            # epoch is impossible, so those ids can never be probed
-            # again) — the same snapshot-retention pass the IVF
-            # maintainer documents. Array cost is per-CELL, so the
-            # state row stays KB-sized between compactions.
-            F.array_distinct(F.flatten(F.collect_list("batch_ids")))
-            .alias("batch_ids"),
-        )
-        .localCheckpoint()
+        ],
+        batch_id,
     )
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("day").parquet(target_path)
 
 
 def stream_moment_partials(
@@ -141,17 +88,9 @@ def stream_moment_partials(
     """Drain available input, folding each micro-batch's exact moment
     partials through the ledger."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_moments_batch(
-            batch_df, batch_id, target_path, group_col, ts_col, value_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, checkpoint, lambda df, batch_id: fold_moments_batch(
+        df, batch_id, target_path, group_col, ts_col, value_col
+    ))
 
 
 def serve_moment_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -161,8 +100,6 @@ def serve_moment_stats(spark: SparkSession, path: str) -> DataFrame:
     single correctly-rounded double ops over exact decimal sums, and
     both are invariant under exact doubling of the sums (see module
     docstring)."""
-    from etl_rj_spark.streaming.fsutil import read_state_or_schema
-
     g = read_state_or_schema(spark, path).groupBy("grp").agg(
         F.sum("n").alias("n"),
         F.sum("s").cast("decimal(38,0)").alias("s"),

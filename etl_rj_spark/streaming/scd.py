@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_rj_spark.operators.scd import scd2_apply_multi
+from etl_rj_spark.streaming.fsutil import _drain
 
 
 def _hpath(spark: SparkSession, p: str):
@@ -137,9 +138,4 @@ def stream_scd2_maintain(
         finally:
             batch_df.unpersist()
 
-    return (
-        changes_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(changes_stream, checkpoint, fold)

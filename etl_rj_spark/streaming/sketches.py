@@ -1,31 +1,48 @@
-"""Streaming maintenance of mergeable distinct-count sketches.
+"""Streaming maintenance of mergeable sketch states.
 
-The batch side (`analytics.tpch_suite.hll_sketch_rollup`) proves the
-posture: per-(group, day) DataSketches HLL partials union-merge to any
-rollup level with no history rescan. This module keeps that partial
-table CURRENT from a stream: each micro-batch sketches its own rows,
-merges them into the persisted partials for exactly the days the batch
+Each maintainer keeps a day-partitioned table of per-(cell, day)
+partial states CURRENT from a stream: a micro-batch builds its own
+partials, merges them into the stored partials of exactly the days it
 touched, and rewrites ONLY those day partitions (dynamic partition
-overwrite) — cold days are never read or written.
+overwrite) — cold days are never read or written. One fold body,
+:func:`_fold_days`, does this for every state class here and for the
+exact moments in :mod:`etl_rj_spark.streaming.moments`; each
+maintainer only names its partials, its cell keys and its merge
+aggregates.
 
-Delivery semantics: HLL union takes the per-register max, so merging
-the same batch twice is a no-op — redelivered batches (crash before
-checkpoint commit, even mid-rewrite of a day partition) converge to
-the identical table. The sink is therefore idempotent WITHOUT an
-anti-join or a transaction, which is strictly cheaper than the K1
-dedup posture: sketch state is the rare case where blind re-merge is
-safe. At 100 TB the partial table stays tiny (groups × days × ~4 KB
-per lgK=12 sketch) while the events it summarizes never need
-re-scanning.
+Delivery semantics split the classes in two:
+
+- **idempotent** — HLL (union is a per-register max) and theta (set
+  union): merging the same batch twice is a no-op, so a redelivered
+  batch (crash before checkpoint commit, even mid-rewrite of a day
+  partition) converges to the identical table with no bookkeeping.
+  The batch side (``analytics.tpch_suite.hll_sketch_rollup``) proves
+  the posture: per-(group, day) partials union-merge to any rollup
+  level with no history rescan.
+- **additive** — frequent items, count-min counters, exact moments:
+  merging a batch twice double-counts, so every stored row carries a
+  ``batch_ids`` LEDGER of the foreachBatch ids its cell absorbed, and
+  a redelivered batch (same ``batch_id``, Spark's restart contract)
+  is skipped for exactly the cells that already hold it. A crash
+  mid-rewrite leaves some touched days folded and some not;
+  redelivery folds only the unfolded ones.
+
+State stays tiny at any input scale (groups × days × KB-sized
+sketches) while the events it summarizes never need re-scanning.
 """
 
 from __future__ import annotations
+
+import operator
+from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_rj_spark.streaming.fsutil import (
+    _drain,
     ensure_state_schema,
     has_visible_data,
     read_state_or_schema,
@@ -52,13 +69,12 @@ HLL_MERGE_TOL = 0.01
 
 
 def _touched_days_cond(fresh: DataFrame):
-    """Shared by all three folds (HLL / top-k / theta): collect the
-    distinct days this batch touched and build the read-back predicate
-    for exactly those partitions. Returns ``None`` when the batch is
-    empty. NULL-day handling is deliberate and identical everywhere:
-    ``isin`` never matches NULL, so the null-ts partition gets an
-    explicit ``isNull`` arm — without it a null-day batch would replace
-    the null partition having read none of it (silent data loss)."""
+    """Collect the distinct days this batch touched and build the
+    read-back predicate for exactly those partitions. Returns ``None``
+    when the batch is empty. ``isin`` never matches NULL, so the
+    null-ts partition gets an explicit ``isNull`` arm — without it a
+    null-day batch would replace the null partition having read none
+    of it (silent data loss)."""
     days = [r.day for r in fresh.select("day").distinct().collect()]
     if not days:
         return None
@@ -69,21 +85,106 @@ def _touched_days_cond(fresh: DataFrame):
     return cond
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """Explicit Hadoop-FS existence probe — a broad
-    ``except AnalysisException`` around the read would also swallow
-    REAL analysis errors (schema drift in the partials table, a
-    different group_col than it was built with) and silently replace
-    accumulated partials with only the current batch's sketches.
+def _fold_days(
+    fresh: DataFrame,
+    target_path: str,
+    keys: Sequence[str],
+    aggs: Sequence[Column],
+    batch_id: int | None = None,
+    ledger_keys: Sequence[str] | None = None,
+) -> None:
+    """Fold one batch's partials ``fresh`` (cell ``keys``, ``day``
+    among them, plus state columns) into the day-partitioned state
+    table at ``target_path``, merging with the class's ``aggs``.
 
-    "Exists" means HAS VISIBLE DATA: a directory holding only
-    underscore/dot-hidden entries (the ``_schema`` sidecar an empty
-    first drain leaves) is NOT a materialized table — reading it would
-    throw UNABLE_TO_INFER_SCHEMA, and the fold must take the
-    first-write branch instead (r10 nullmix-regime fix). Since r11 the
-    probe itself lives in :mod:`fsutil` (``has_visible_data``), shared
-    with the state/snapshot/ORC readers."""
-    return has_visible_data(spark, path)
+    Without a ``batch_id`` (idempotent classes) the first batch is
+    written as built and the read-back of existing partials is not
+    checkpointed on its own. With one, the fold keeps the ledger: a
+    ``batch_ids`` column on every row, fresh cells anti-joined away
+    where a stored row with the same ``ledger_keys`` (default:
+    ``keys``) already holds this id, and the ledgers concatenated in
+    the merge.
+
+    Every step is NULL-day-safe: the read-back predicate has an
+    ``isNull`` arm, the anti-join uses ``eqNullSafe``, and the merge
+    is one ``groupBy`` in which NULL forms its own group.
+
+    The read-back is chosen by an explicit visible-data probe, never
+    by catching ``AnalysisException`` around the read: that would
+    also swallow real analysis errors (schema drift in the partials
+    table, a different group column than it was built with) and
+    silently replace accumulated partials with this batch's alone."""
+    spark = fresh.sparkSession
+    # materialize the batch partials ONCE: the touched-day collect and
+    # the merge below both reuse the checkpoint
+    fresh = fresh.localCheckpoint()
+    cols = fresh.columns
+    stored = fresh
+    if batch_id is not None:
+        stored = fresh.select(*cols, F.array().cast("array<long>").alias("batch_ids"))
+    cond = _touched_days_cond(fresh)
+    if cond is None:
+        # empty drain: still materialize the table's SCHEMA so a
+        # serving read sees an empty state table, not PATH_NOT_FOUND
+        if not has_visible_data(spark, target_path):
+            ensure_state_schema(stored, target_path)
+        return
+    exists = has_visible_data(spark, target_path)
+    if batch_id is None:
+        merged = fresh  # first batch: no partials yet
+        if exists:
+            merged = (
+                spark.read.parquet(target_path).where(cond)
+                .unionByName(fresh).groupBy(*keys).agg(*aggs)
+            )
+    else:
+        existing = (
+            spark.read.parquet(target_path).where(cond) if exists else stored.limit(0)
+        ).localCheckpoint()  # read once; the target is rewritten below
+        ledger_keys = list(ledger_keys or keys)
+        folded = existing.filter(F.array_contains("batch_ids", F.lit(batch_id))).select(
+            *[F.col(k).alias(f"__ledger_{k}") for k in ledger_keys]
+        )
+        if ledger_keys != list(keys):
+            # a ledger coarser than the cell repeats once per cell row
+            folded = folded.distinct()
+        fresh_new = fresh.join(
+            folded,
+            reduce(
+                operator.and_,
+                [F.col(k).eqNullSafe(F.col(f"__ledger_{k}")) for k in ledger_keys],
+            ),
+            "left_anti",
+        )
+        merged = (
+            existing.select(*cols, "batch_ids")
+            .unionByName(
+                fresh_new.select(
+                    *cols, F.array(F.lit(batch_id).cast("long")).alias("batch_ids")
+                )
+            )
+            .groupBy(*keys)
+            .agg(
+                *aggs,
+                # RETENTION: the ledger grows one id per folded batch.
+                # On a long-running stream, compact it periodically by
+                # dropping ids <= the streaming checkpoint's committed
+                # epoch (redelivery below it is impossible, so those
+                # ids can never be probed again). Array cost is per
+                # cell, so a state row stays KB-sized between passes.
+                F.array_distinct(F.flatten(F.collect_list("batch_ids")))
+                .alias("batch_ids"),
+            )
+        )
+    # localCheckpoint materializes the merge so the dynamic overwrite
+    # below is not "writing a path being read from"; a crash between
+    # here and commit is healed by redelivery. Per-WRITE dynamic
+    # overwrite (only the merged days replaced): the writer option
+    # scopes it — never mutate the session conf, other writers may
+    # rely on static overwrite-all semantics.
+    merged.localCheckpoint().write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("day").parquet(target_path)
 
 
 def sketch_batch(
@@ -99,15 +200,6 @@ def sketch_batch(
     ).agg(F.hll_sketch_agg(key_col, F.lit(lgk)).alias("sk"))
 
 
-def merge_partials(existing: DataFrame, fresh: DataFrame, group_col: str) -> DataFrame:
-    """Union-merge two partial tables (register-max, lossless)."""
-    return (
-        existing.unionByName(fresh)
-        .groupBy(group_col, "day")
-        .agg(F.hll_union_agg("sk").alias("sk"))
-    )
-
-
 def stream_hll_partials(
     events_stream: DataFrame,
     target_path: str,
@@ -118,49 +210,18 @@ def stream_hll_partials(
     lgk: int = 12,
 ) -> StreamingQuery:
     """Drain available input (Trigger.AvailableNow), folding each
-    micro-batch into the persisted day-partitioned partial table at
-    ``target_path``. Only day partitions present in the batch are read
-    back and rewritten."""
+    micro-batch's HLL partials into the day-partitioned table at
+    ``target_path`` (:func:`_fold_days`, idempotent: no ledger)."""
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # materialize the batch sketches ONCE — both the touched-day
-        # collect and the merge/write below reuse the checkpointed
-        # result instead of re-running the aggregation
-        fresh = sketch_batch(
-            batch_df, group_col, ts_col, key_col, lgk
-        ).localCheckpoint()
-        cond = _touched_days_cond(fresh)
-        if cond is None:
-            # empty drain: still materialize the table's SCHEMA so a
-            # serving read sees an empty state table, not
-            # PATH_NOT_FOUND (r10 degenerate-input sweep fix)
-            if not _table_exists(spark, target_path):
-                ensure_state_schema(fresh, target_path)
-            return
-        if _table_exists(spark, target_path):
-            existing = spark.read.parquet(target_path).where(cond)
-            merged = merge_partials(existing, fresh, group_col)
-        else:
-            merged = fresh  # first batch: no partials yet
-        # localCheckpoint materializes the merge so the dynamic
-        # overwrite below is not "writing a path being read from";
-        # a crash between here and commit is healed by redelivery
-        # (union idempotence — module docstring).
-        merged = merged.localCheckpoint()
-        # per-WRITE dynamic overwrite (only the merged days replaced);
-        # the writer option scopes it — never mutate the session conf,
-        # other writers may rely on static overwrite-all semantics
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("day").parquet(target_path)
+        _fold_days(
+            sketch_batch(batch_df, group_col, ts_col, key_col, lgk),
+            target_path,
+            (group_col, "day"),
+            [F.hll_union_agg("sk").alias("sk")],
+        )
 
-    return (
-        events_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events_stream, checkpoint, fold)
 
 
 def estimate_partials(
@@ -177,20 +238,8 @@ def estimate_partials(
 
 
 # --------------------------------------------------------------------------
-# Frequent-items (heavy hitters) maintenance — the NON-idempotent twin
+# Frequent-items (heavy hitters) — additive, so ledgered
 # --------------------------------------------------------------------------
-#
-# HLL union above is register-max: blind re-merge of a redelivered batch
-# is a no-op, so the fold needs no delivery bookkeeping. Frequent-items
-# combine is ADDITIVE: merging the same batch state twice double-counts
-# every item. The fold below therefore carries a per-day BATCH-ID
-# LEDGER — each day partial remembers which micro-batch ids it already
-# folded, and a redelivered batch (same foreachBatch batch_id, Spark's
-# restart contract) is skipped for exactly the days that already
-# absorbed it. Crash mid-rewrite leaves some touched days folded and
-# some not; redelivery then folds only the unfolded days — converging
-# to the same table either way. State stays tiny: groups-per-day is
-# one state struct (~KBs at maxItemsTracked=1024) + a short id array.
 
 
 def topk_sketch_batch(
@@ -217,61 +266,13 @@ def fold_topk_batch(
     table at ``target_path``. Re-invoking with the same ``batch_id``
     is a no-op for every day that already folded it (the ledger), so
     foreachBatch redelivery cannot double-count."""
-    spark = batch_df.sparkSession
-    fresh = topk_sketch_batch(batch_df, item_col, ts_col, max_items).localCheckpoint()
-    cond = _touched_days_cond(fresh)
-    if cond is None:
-        # empty drain: materialize the ledgered table's schema (r10)
-        if not _table_exists(spark, target_path):
-            ensure_state_schema(
-                fresh.select(
-                    "day", "st", F.array().cast("array<long>").alias("batch_ids")
-                ),
-                target_path,
-            )
-        return
-    if _table_exists(spark, target_path):
-        existing = spark.read.parquet(target_path).where(cond)
-    else:
-        existing = (
-            fresh.select(
-                "day", "st", F.array().cast("array<long>").alias("batch_ids")
-            ).limit(0)
-        )
-    existing = existing.localCheckpoint()  # read once; target is rewritten below
-
-    # days that already folded this batch id keep their state untouched.
-    # Every step must be NULL-DAY-SAFE (the null-ts partition is a real
-    # day group — the HLL fold documents losing it as silent data
-    # loss): the anti-join uses eqNullSafe, and the merge is a single
-    # groupBy (NULL forms its own group) with the ledger carried as a
-    # column — no null-unsafe equi-join anywhere on "day".
-    folded = existing.filter(
-        F.array_contains("batch_ids", F.lit(batch_id))
-    ).select(F.col("day").alias("__fday"))
-    fresh_new = fresh.join(
-        folded, F.col("day").eqNullSafe(F.col("__fday")), "left_anti"
+    _fold_days(
+        topk_sketch_batch(batch_df, item_col, ts_col, max_items),
+        target_path,
+        ("day",),
+        [F.expr(f"approx_top_k_combine(st, {int(max_items)})").alias("st")],
+        batch_id,
     )
-
-    merged = (
-        existing.select("day", "st", "batch_ids")
-        .unionByName(
-            fresh_new.select(
-                "day", "st",
-                F.array(F.lit(batch_id).cast("long")).alias("batch_ids"),
-            )
-        )
-        .groupBy("day")
-        .agg(
-            F.expr(f"approx_top_k_combine(st, {int(max_items)})").alias("st"),
-            F.array_distinct(F.flatten(F.collect_list("batch_ids")))
-            .alias("batch_ids"),
-        )
-        .localCheckpoint()
-    )
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("day").parquet(target_path)
 
 
 def stream_topk_partials(
@@ -283,22 +284,11 @@ def stream_topk_partials(
     max_items: int = 1024,
 ) -> StreamingQuery:
     """Drain available input (Trigger.AvailableNow), folding each
-    micro-batch into the persisted day-partitioned frequent-items
-    partial table — the heavy-hitters twin of
-    :func:`stream_hll_partials`, ledgered because combine is additive
-    (see module comment)."""
+    micro-batch through :func:`fold_topk_batch`."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_topk_batch(
-            batch_df, batch_id, target_path, item_col, ts_col, max_items
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events_stream, checkpoint, lambda df, batch_id: fold_topk_batch(
+        df, batch_id, target_path, item_col, ts_col, max_items
+    ))
 
 
 def estimate_topk_partials(
@@ -314,8 +304,7 @@ def estimate_topk_partials(
     in Spark's sketch serializer (``ApproxTopKCombine.serialize``,
     ``scala.MatchError: null``); a grouped aggregate over zero rows
     emits zero groups, so the empty stream serves the correct EMPTY
-    top-k (r11; surfaced when the fingerprint-keyed degenerate cache
-    rebuild exposed a stale-twin mask over the r10 empty sweep)."""
+    top-k."""
     combined = (
         read_state_or_schema(spark, path)
         .groupBy(F.lit(1).alias("__g"))
@@ -331,16 +320,11 @@ def estimate_topk_partials(
 
 
 # --------------------------------------------------------------------------
-# Theta-sketch maintenance — idempotent like HLL, but serves SET ALGEBRA
+# Theta sketches — idempotent like HLL, and they serve SET ALGEBRA: the
+# per-(group, day) partials answer intersection / difference questions
+# across groups at serve time (audience overlap over a stream) without
+# re-scanning events.
 # --------------------------------------------------------------------------
-#
-# Completes the maintenance triptych: HLL partials (idempotent by
-# register-max, serve distinct counts), frequent-items (additive —
-# ledgered), and theta partials — idempotent by SET union (re-merging a
-# redelivered batch unions the same hash set, a no-op), with the extra
-# power HLL lacks: the maintained per-(group, day) sketches answer
-# INTERSECTION / DIFFERENCE questions across groups at serve time
-# (audience overlap over a stream) without ever re-scanning events.
 
 
 def theta_sketch_batch(
@@ -365,42 +349,19 @@ def stream_theta_partials(
     key_col: str = "user_id",
     lgk: int = 14,
 ) -> StreamingQuery:
-    """Drain available input (Trigger.AvailableNow), folding per-batch
-    theta partials into the day-partitioned table — same touched-days
-    dynamic overwrite as :func:`stream_hll_partials`, same blind
-    re-merge safety (set union is idempotent)."""
+    """Drain available input (Trigger.AvailableNow), folding each
+    micro-batch's theta partials into the day-partitioned table at
+    ``target_path`` (:func:`_fold_days`, idempotent: no ledger)."""
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = theta_sketch_batch(
-            batch_df, group_col, ts_col, key_col, lgk
-        ).localCheckpoint()
-        cond = _touched_days_cond(fresh)
-        if cond is None:
-            # empty drain: materialize the table's schema (r10)
-            if not _table_exists(spark, target_path):
-                ensure_state_schema(fresh, target_path)
-            return
-        if _table_exists(spark, target_path):
-            existing = spark.read.parquet(target_path).where(cond)
-            merged = (
-                existing.unionByName(fresh)
-                .groupBy(group_col, "day")
-                .agg(F.expr(f"theta_union_agg(sk, {int(lgk)})").alias("sk"))
-            )
-        else:
-            merged = fresh
-        merged = merged.localCheckpoint()
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("day").parquet(target_path)
+        _fold_days(
+            theta_sketch_batch(batch_df, group_col, ts_col, key_col, lgk),
+            target_path,
+            (group_col, "day"),
+            [F.expr(f"theta_union_agg(sk, {int(lgk)})").alias("sk")],
+        )
 
-    return (
-        events_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events_stream, checkpoint, fold)
 
 
 def theta_overlap(
@@ -546,63 +507,19 @@ def fold_cms_batch(
     width: int = 64,
 ) -> None:
     """Fold one micro-batch's CMS partials into the day-partitioned
-    state at ``target_path``. Counters are ADDITIVE (the frequent-items
-    class), so redelivery safety is the batch-id ledger: a day that
-    already folded this ``batch_id`` keeps every counter untouched.
-    Same null-day-safe mechanics as ``fold_topk_batch`` — a day's whole
-    ≤ depth·width cell block folds atomically in one dynamic-partition
-    overwrite, so the ledger lives per day (carried on each cell row).
-    """
-    spark = batch_df.sparkSession
-    fresh = cms_batch(batch_df, key_col, ts_col, depth, width).localCheckpoint()
-    cond = _touched_days_cond(fresh)
-    if cond is None:
-        # empty drain: materialize the ledgered table's schema (r10)
-        if not _table_exists(spark, target_path):
-            ensure_state_schema(
-                fresh.select(
-                    "day", "row", "col", "counter",
-                    F.array().cast("array<long>").alias("batch_ids"),
-                ),
-                target_path,
-            )
-        return
-    if _table_exists(spark, target_path):
-        existing = spark.read.parquet(target_path).where(cond)
-    else:
-        existing = fresh.select(
-            "day", "row", "col", "counter",
-            F.array().cast("array<long>").alias("batch_ids"),
-        ).limit(0)
-    existing = existing.localCheckpoint()
-
-    folded = (
-        existing.filter(F.array_contains("batch_ids", F.lit(batch_id)))
-        .select(F.col("day").alias("__fday"))
-        .distinct()
+    state at ``target_path``. Counters are ADDITIVE, so redelivery
+    safety is the batch-id ledger. A day's whole ≤ depth·width cell
+    block folds in one dynamic-partition overwrite, so the ledger is
+    kept per day (carried on each cell row): a day that already folded
+    this ``batch_id`` keeps every counter untouched."""
+    _fold_days(
+        cms_batch(batch_df, key_col, ts_col, depth, width),
+        target_path,
+        ("day", "row", "col"),
+        [F.sum("counter").alias("counter")],
+        batch_id,
+        ledger_keys=("day",),
     )
-    fresh_new = fresh.join(
-        folded, F.col("day").eqNullSafe(F.col("__fday")), "left_anti"
-    )
-    merged = (
-        existing.select("day", "row", "col", "counter", "batch_ids")
-        .unionByName(
-            fresh_new.select(
-                "day", "row", "col", "counter",
-                F.array(F.lit(batch_id).cast("long")).alias("batch_ids"),
-            )
-        )
-        .groupBy("day", "row", "col")
-        .agg(
-            F.sum("counter").alias("counter"),
-            F.array_distinct(F.flatten(F.collect_list("batch_ids")))
-            .alias("batch_ids"),
-        )
-        .localCheckpoint()
-    )
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("day").parquet(target_path)
 
 
 def stream_cms_partials(
@@ -614,20 +531,12 @@ def stream_cms_partials(
     depth: int = 4,
     width: int = 64,
 ) -> StreamingQuery:
-    """Drain available input, folding each micro-batch's count-min
-    partials into the persisted day-partitioned state — the CMS member
-    of the maintenance family (additive → ledgered, like
-    frequent-items and the exact moments)."""
+    """Drain available input, folding each micro-batch through
+    :func:`fold_cms_batch`."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_cms_batch(batch_df, batch_id, target_path, key_col, ts_col, depth, width)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, checkpoint, lambda df, batch_id: fold_cms_batch(
+        df, batch_id, target_path, key_col, ts_col, depth, width
+    ))
 
 
 def serve_cms_sketch(spark: SparkSession, path: str) -> DataFrame:

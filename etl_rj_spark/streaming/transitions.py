@@ -39,14 +39,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from etl_rj_spark.streaming.fsutil import _drain, hadoop_path_fs, path_exists
+
 _PAIRS_SCHEMA = "prev_state string, state string, n bigint"
 def latest_version(spark: SparkSession, root: str) -> int | None:
     """Largest committed snapshot version under ``root`` (those whose
     ``commit`` marker exists), or None. Metadata-only listing,
     scheme-aware (``FileSystem.get`` would 'Wrong FS' on an s3a://
     root under a different default filesystem)."""
-    from etl_rj_spark.streaming.fsutil import hadoop_path_fs, path_exists
-
     fs, path = hadoop_path_fs(spark, root)
     if not fs.exists(path):
         return None
@@ -172,12 +172,7 @@ def stream_transition_partials(
             batch_df, batch_id, root, entity_col, ts_col, tiebreak_col, state_col
         )
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, checkpoint, fold)
 
 
 def serve_transition_matrix(spark: SparkSession, root: str) -> DataFrame:

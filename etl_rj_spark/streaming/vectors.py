@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_rj_spark.operators.kmeans import append_ivf_index
+from etl_rj_spark.streaming.fsutil import _drain
 
 
 def stream_ivf_index(
@@ -43,9 +44,4 @@ def stream_ivf_index(
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         append_ivf_index(batch_df, table_prefix, id_col, vec_col)
 
-    return (
-        vectors_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(vectors_stream, checkpoint, fold)

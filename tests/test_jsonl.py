@@ -54,6 +54,22 @@ def test_jsonl_quarantine_preserves_raw_lines(spark, tmp_path):
     assert raw == sorted([lines[1], lines[2], lines[3]])
 
 
+def test_quarantine_split_leaves_cache_empty(spark, tmp_path):
+    """The split materializes its scan through a lazy localCheckpoint,
+    not cache(): once both sides are collected, the session's cache
+    manager holds nothing, so repeated calls pin no storage. The
+    quarantined side runs first, so the checkpoint also serves a query
+    that references only the corrupt-record column."""
+    d = tmp_path / "shards"
+    d.mkdir()
+    (d / "s0.jsonl").write_text('{"k": 1, "v": "a"}\ngarbage line\n')
+    spark.catalog.clearCache()
+    good, bad = quarantine_corrupt(read_jsonl(spark, str(d), SCHEMA))
+    assert [r.raw_line for r in bad.collect()] == ["garbage line"]
+    assert [(r.k, r.v) for r in good.collect()] == [(1, "a")]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_jsonl_gz_reads_and_repartitions(spark, tmp_path):
     """A .gz shard is non-splittable (one task per file); min_partitions
     restores parallelism right after the read."""

@@ -635,59 +635,6 @@ def test_stream_scd2_history_folds_and_redelivery_is_noop(spark, tmp_path):
         ).awaitTermination()
 
 
-def test_stateful_v2_sessionize_matches_v1(spark, sf_dir, events_dir, tmp_path):
-    """transformWithStateInPandas (v2 arbitrary-stateful API) must
-    produce exactly the closed sessions the v1 applyInPandasWithState
-    operator produces on the same stream — the no-behavior-change
-    migration contract. Runs under the RocksDB state store provider
-    (required by transformWithState), restoring the session's provider
-    afterwards."""
-    from etl_rj_spark.streaming.stateful import streaming_sessionize
-    from etl_rj_spark.streaming.stateful2 import (
-        ROCKSDB_PROVIDER,
-        transform_with_state_available,
-        streaming_sessionize_v2,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip(
-            "transformWithState's Python runner needs google.protobuf, "
-            "absent in this container (v1/v2 parity asserted where present)"
-        )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        def drain(make, name, ck):
-            q = (
-                make(read_event_stream(spark, events_dir), gap_seconds=1800)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / ck))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            return {
-                (r.user_id, r.session_start): (r.n_events, round(r.value_sum, 6))
-                for r in spark.sql(f"SELECT * FROM {name}").collect()
-            }
-
-        v2 = drain(streaming_sessionize_v2, "sess_v2", "ck_v2")
-        v1 = drain(streaming_sessionize, "sess_v1", "ck_v1")
-        assert v2 == v1
-        assert len(v2) > 0
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def test_sessionize_timeout_closes_trailing_session(spark, tmp_path):
     """EventTimeTimeout discipline: user A's trailing session stays
     open until LATER events (a different user) advance the watermark
@@ -1050,6 +997,115 @@ def test_moment_fold_ledger_null_day_and_exact_serve(spark, tmp_path):
     served2 = {r.grp: r for r in serve_moment_stats(spark, path).collect()}
     assert served2["a"].n == 8
     assert served2["a"].mean_ppm == a.mean_ppm and served2["a"].var_ppm == a.var_ppm
+
+
+def _maintainers():
+    """kind -> (stream_fn, ledgered fold_fn or None, serve(spark, path)
+    as a sorted list) for the five day-partition state maintainers."""
+    from etl_rj_spark.streaming.moments import (
+        fold_moments_batch,
+        serve_moment_stats,
+        stream_moment_partials,
+    )
+    from etl_rj_spark.streaming.sketches import (
+        estimate_partials,
+        estimate_topk_partials,
+        fold_cms_batch,
+        fold_topk_batch,
+        serve_cms_sketch,
+        stream_cms_partials,
+        stream_hll_partials,
+        stream_theta_partials,
+        stream_topk_partials,
+        theta_overlap,
+    )
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    return {
+        "hll": (stream_hll_partials, None,
+                lambda spark, p: rows(estimate_partials(spark, p))),
+        "theta": (stream_theta_partials, None,
+                  lambda spark, p: rows(theta_overlap(spark, p, "view", "buy"))),
+        "topk": (stream_topk_partials, fold_topk_batch,
+                 lambda spark, p: rows(estimate_topk_partials(spark, p))),
+        "cms": (stream_cms_partials, fold_cms_batch,
+                lambda spark, p: rows(serve_cms_sketch(spark, p))),
+        "moments": (stream_moment_partials, fold_moments_batch,
+                    lambda spark, p: rows(serve_moment_stats(spark, p))),
+    }
+
+
+@pytest.mark.parametrize("kind", ["hll", "theta", "topk", "cms", "moments"])
+def test_maintainer_fold_contract(spark, tmp_path, kind):
+    """One contract for every day-partition state maintainer: a
+    redelivered batch changes no estimate (and, for the ledgered
+    classes, no stored row); the NULL-day partition survives a later
+    fold that does not touch it; an empty first drain leaves a
+    readable 0-row table with the full schema. The idempotent classes
+    (no fold function) redeliver through a fresh-checkpoint drain."""
+    import datetime
+    import itertools
+
+    from etl_rj_spark.streaming.fsutil import read_state_or_schema
+
+    stream_fn, fold_fn, serve = _maintainers()[kind]
+    schema = "event_id long, ts timestamp, user_id long, event_type string, cents long"
+    d1, d2 = datetime.datetime(2024, 1, 1, 8), datetime.datetime(2024, 1, 2, 9)
+
+    def batch(rows):
+        return spark.createDataFrame([(i, *r) for i, r in enumerate(rows)], schema)
+
+    b0 = batch([(d1, 1, "view", 10), (d1, 2, "buy", 20), (d2, 3, "view", 30)])
+    b1 = batch([(d2, 4, "buy", 40), (d2, 1, "view", 50),
+                (None, 5, "view", 60), (None, 6, "buy", 70)])
+    b2 = batch([(d1, 7, "view", 80), (d1, 2, "buy", 90)])
+    steps = itertools.count()
+
+    def drain(df, target):
+        n = next(steps)
+        src = str(tmp_path / f"in{n}")
+        df.coalesce(1).write.parquet(src)
+        stream_fn(
+            spark.readStream.schema(schema).parquet(src), target, str(tmp_path / f"ck{n}")
+        ).awaitTermination()
+
+    def fold(df, batch_id, target):
+        if fold_fn is None:
+            drain(df, target)
+        else:
+            fold_fn(df, batch_id, target)
+
+    path = str(tmp_path / "state")
+
+    def state():
+        return sorted(map(repr, read_state_or_schema(spark, path).collect()))
+
+    def null_day():
+        return sorted(map(repr, spark.read.parquet(path).where("day IS NULL").collect()))
+
+    fold(b0, 0, path)
+    fold(b1, 1, path)
+    served, stored, nulls = serve(spark, path), state(), null_day()
+    assert nulls
+    fold(b1, 1, path)  # redelivery
+    assert serve(spark, path) == served
+    if fold_fn is not None:
+        assert state() == stored
+    fold(b2, 2, path)  # touches day 1 only
+    assert null_day() == nulls
+    assert serve(spark, path) != served
+
+    fresh = str(tmp_path / "fresh")
+    drain(spark.createDataFrame([], schema), fresh)
+    back = read_state_or_schema(spark, fresh)
+    assert back.count() == 0
+
+    def shape(df):
+        return sorted((f.name, f.dataType.simpleString()) for f in df.schema.fields)
+
+    assert shape(back) == shape(read_state_or_schema(spark, path))
 
 
 def test_transition_fold_boundary_stitch_and_idempotence(spark, tmp_path):
